@@ -1292,9 +1292,11 @@ case class GraftCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** Rewrite target-relation attribute refs to plain names and build a
     * Column the exec can resolve against a fresh read of the table. */
-  /** Inline `With`/CommonExpressionRef shapes (how BETWEEN resolves in
-    * Spark 4) — a With whose attributes become Unresolved breaks its own
-    * dataType plumbing, and re-analysis re-deduplicates anyway. */
+  /** Inline `With`/CommonExpressionRef shapes, and the `Between` that
+    * wraps one (how BETWEEN resolves in Spark 4), leaving its plain
+    * `lo <= x AND x <= hi` — a With whose attributes become Unresolved
+    * breaks its own dataType plumbing, re-analysis re-deduplicates
+    * anyway, and the routes below match the plain conjunction. */
   private def inlineWith(e: Expression): Expression = e.transformUp {
     case w: org.apache.spark.sql.catalyst.expressions.With =>
       val byId = w.defs.map(d => d.id -> inlineWith(d.child)).toMap
@@ -1302,6 +1304,7 @@ case class GraftCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
         case r: org.apache.spark.sql.catalyst.expressions.CommonExpressionRef =>
           byId(r.id)
       }
+    case b: org.apache.spark.sql.catalyst.expressions.Between => b.replacement
   }
 
   private def toNamedColumn(e: Expression, relIds: Set[ExprId],
@@ -1665,7 +1668,9 @@ case class GraftCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
         "materialize the sampled keys into a source table first")
 
   private def makeDelete(r: DataSourceV2Relation, t: GraftSparkTable,
-                         cond: Expression): LogicalPlan = {
+                         cond0: Expression): LogicalPlan = {
+    // BETWEEN resolves to a With; every route below matches plain shapes
+    val cond = inlineWith(cond0)
     val relIds = r.output.map(_.exprId).toSet
     requireDeterministic(cond, "DELETE")
     // [NOT] EXISTS with key-equality correlation → the engine's semi/anti-
@@ -2207,9 +2212,14 @@ case class GraftCatalogRule(spark: SparkSession) extends Rule[LogicalPlan] {
         case a: AttributeReference if srcIds(a.exprId) =>
           UnresolvedAttribute(Seq(a.name))
       })).getOrElse(default)
-    // the aligned SET * / INSERT * shape: every value the same-named
-    // source column (possibly cast) — takes the engine's star fast path
+    // the aligned SET * / INSERT * shape: EVERY target column assigned,
+    // each from the same-named source column (possibly cast) — takes the
+    // engine's star fast path, which copies the whole source row; a
+    // partial list (`SET p = s.p`) must keep the unassigned columns
+    val targetNames = m.targetTable.output.map(_.name).toSet
     def isStarAssign(assignments: Seq[Assignment]): Boolean =
+      assignments.collect { case Assignment(a: AttributeReference, _) => a.name }
+        .toSet == targetNames &&
       assignments.forall { asg =>
         (asg.key, stripAlias(asg.value)) match {
           case (a: AttributeReference, v: AttributeReference) =>

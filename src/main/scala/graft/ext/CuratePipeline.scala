@@ -10,12 +10,15 @@ import org.apache.spark.sql.functions._
   * oracled operators; the composition itself is oracled end to end (key
   * `curate_corpus` mirrors all six stages in one chained-CTE SQL).
   *
-  * Scale shape: the composition inherits the operator shapes — the quality
-  * gate is a per-row scan, both dedups shuffle only (id, hash/signature)
-  * rows, decontamination probes a broadcast hashed gram set, and chunking/
-  * splitting are shuffle-free projections — so no stage ever exchanges
-  * document text except the final chunk emission, and the whole plan holds
-  * at corpus scale.
+  * Scale shape: the quality gate is a per-row scan, near-dup dedup
+  * shuffles only (id, signature) rows, decontamination probes a broadcast
+  * hashed gram set, and chunking/splitting are shuffle-free projections.
+  * Two exchanges carry document text: the final chunk emission, and exact
+  * dedup's `min_by(struct(id, text))` groupBy, which ships at most one
+  * (id, text) candidate per distinct hash per map partition. That one text
+  * exchange is the trade for running the quality gate once: the id-only
+  * shape (`Dedup.exact`, then a join back for the text) re-executed the
+  * gate on the join side and shuffled the text through the join anyway.
   */
 object CuratePipeline {
 

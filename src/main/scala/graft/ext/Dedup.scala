@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for 100 TB-scale corpora (SURVEY.md §2.9).
   *
-  * Scale design: every variant shuffles only (key, id) pairs — a hash or a
-  * band key, never the document text — so shuffle volume is O(rows × key
-  * width), independent of document size. Candidate verification joins are
-  * equi-joins on those keys, which AQE resolves to broadcast or
-  * shuffle-hash as cardinality dictates.
+  * Scale design: every variant here shuffles only (key, id) pairs — a hash
+  * or a band key, never the document text — so shuffle volume is
+  * O(rows × key width), independent of document size. Candidate
+  * verification joins are equi-joins on those keys, which AQE resolves to
+  * broadcast or shuffle-hash as cardinality dictates. (`CuratePipeline`
+  * does its exact-dedup step inline instead, with one text-carrying
+  * `min_by` exchange — see its header for that trade.)
   */
 object Dedup {
 

@@ -30,10 +30,11 @@ final case class ColMetrics(min: Option[String], max: Option[String], nullCount:
   * "keep everything" — prunes to the files that actually contain the value
   * (false positives only: pruning stays sound).
   *
-  * Hashing is ONE `xxhash64` of the value's canonical string (Spark's
-  * expression on the write side, [[hashString]] — the same algorithm — at
-  * plan time), fanned to [[NumHash]] probe positions by Kirsch–Mitzenmacher
-  * double hashing, so writer and reader can never disagree. */
+  * Hashing is ONE `xxhash64` of the value's canonical string
+  * ([[hashValue]] in the write tasks, [[hashString]] at plan time — one
+  * implementation), fanned to [[NumHash]] probe positions by
+  * Kirsch–Mitzenmacher double hashing ([[positions]], shared too), so
+  * writer and reader can never disagree. */
 object BloomFilter {
   val NumBits = 1024
   val NumLanes: Int = NumBits / 64
@@ -41,12 +42,21 @@ object BloomFilter {
   /** Spark's `xxhash64(...)` default seed — parity with the expression. */
   val Seed = 42L
 
-  /** Driver-side xxhash64 of the canonical string, bit-identical to the
-    * write side's `xxhash64(cast(col as string))`. */
+  /** xxhash64 of a value's canonical string — Spark's
+    * `xxhash64(cast(col as string))`. */
   def hashString(s: String): Long =
-    org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-      org.apache.spark.unsafe.types.UTF8String.fromString(s),
-      org.apache.spark.sql.types.StringType, Seed)
+    hashValue(org.apache.spark.unsafe.types.UTF8String.fromString(s))
+
+  /** [[hashString]] of a non-null Catalyst value of a [[supported]] type:
+    * strings hash their UTF-8 bytes as they are, integers their decimal
+    * rendering (what the cast to string produces). The write side's one
+    * hash per row. */
+  def hashValue(v: Any): Long = v match {
+    case s: org.apache.spark.unsafe.types.UTF8String =>
+      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+        s, org.apache.spark.sql.types.StringType, Seed)
+    case n => hashString(n.toString)
+  }
 
   /** The probe bit positions for a hash (Kirsch–Mitzenmacher: `h1 + j*h2`
     * with overflow wrap — Java arithmetic on both sides). */

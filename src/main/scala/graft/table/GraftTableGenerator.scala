@@ -3,7 +3,7 @@ package graft.table
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -216,10 +216,10 @@ final class GraftTableGenerator(
         bundle.frame(spark, claimIds(rowsPerFile), rowsPerFile, Some(pv), schema))
       val pdir = dataDir.resolve(pv.toString)
       val target = uniqueNumberedFile(pdir, s"$pv-%02d.parquet")
-      writeSingleFile(ordered(df), target)
+      val w = writeFile(ordered(df), target, dataStats)
       stagedData :+= DataFileEntry(target.toString,
         Map(partitionCols.head -> pv.toString), specId, schemaV, opSeq, rowsPerFile,
-        metrics = fileMetrics(target))
+        metrics = w.metrics)
     }
     this
   }
@@ -231,24 +231,21 @@ final class GraftTableGenerator(
       val df = conformed(
         bundle.frame(spark, claimIds(rowsPerFile), rowsPerFile, None, schema))
       val target = uniqueNumberedFile(dataDir, "%02d.parquet")
-      writeSingleFile(ordered(df), target)
+      val w = writeFile(ordered(df), target, dataStats)
       stagedData :+= DataFileEntry(target.toString, Map.empty, specId, schemaV,
-        opSeq, rowsPerFile, metrics = fileMetrics(target))
+        opSeq, rowsPerFile, metrics = w.metrics)
     }
     this
   }
 
   /** Bulk distributed append — the 100 TB-scale sink the per-file loop is
     * not: ONE Spark job writes all files in parallel (`partitionBy` when
-    * the spec is partitioned), then every produced part file is registered
-    * with its real footer row count (a driver-side metadata read, no extra
-    * job — needed for row-lineage assignment; readers still never TRUST
-    * declared counts, that contract is unchanged).
+    * the spec is partitioned), and its tasks hand back each file's honest
+    * row count (needed for row-lineage assignment; readers still never
+    * TRUST declared counts) and metrics — nothing is re-read.
     */
   def appendBulk(df: DataFrame, numFiles: Int): this.type = {
     val opSeq = nextOpSeq()
-    val staging = Files.createTempDirectory(tableDir, ".staging")
-    def list(dir: Path): Seq[Path] = listDir(dir)
     if (partitionCols.isEmpty) {
       // with a declared write order: range-partition so each produced
       // file covers a DISJOINT sort-key range (tight manifest envelopes
@@ -258,18 +255,12 @@ final class GraftTableGenerator(
           df.repartitionByRange(numFiles, sortOrderCols.map(col): _*)
             .sortWithinPartitions(sortOrderCols.map(col): _*)
         else df.repartition(numFiles)
-      laid.write.options(props).mode("overwrite")
-        .parquet(staging.toString)
-      val stats = bulkMetrics(staging)
-      list(staging).filter(_.getFileName.toString.endsWith(".parquet"))
-        .sortBy(_.toString).foreach { part =>
-          val (rc, m) = stats.getOrElse(part.toString,
-            (footerRowCount(part), Map.empty[Int, ColMetrics]))
-          val target = uniqueNumberedFile(dataDir, "%02d.parquet")
-          Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-          stagedData :+= DataFileEntry(target.toString, Map.empty, specId,
-            schemaV, opSeq, rc, metrics = m)
-        }
+      writeFiles(laid, dataStats)(_.foreach { w =>
+        val target = uniqueNumberedFile(dataDir, "%02d.parquet")
+        Files.move(w.path, target, StandardCopyOption.REPLACE_EXISTING)
+        stagedData :+= DataFileEntry(target.toString, Map.empty, specId,
+          schemaV, opSeq, w.rows, metrics = w.metrics)
+      })
     } else {
       // one partition-value column per spec transform (identity keeps the
       // data column; bucket/truncate/day/... compute the hidden value).
@@ -289,39 +280,25 @@ final class GraftTableGenerator(
               dups.map(col) ++ sortOrderCols.map(col): _*)
             .sortWithinPartitions((dups ++ sortOrderCols).map(col): _*)
         else base.repartition(numFiles, dups.map(col): _*)
-      laid.write.options(props)
-        .partitionBy(dups: _*).mode("overwrite").parquet(staging.toString)
-      val stats = bulkMetrics(staging)
-      // walk the nested __gpart0=v0/__gpart1=v1/... layout, rebuilding the
-      // partition tuple from the directory chain
-      def walk(dir: Path, acc: Seq[String]): Seq[(Seq[String], Path)] =
-        if (acc.size == dups.size)
-          list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
-            .sortBy(_.toString).map(p => (acc, p))
-        else {
-          val prefix = s"${dups(acc.size)}="
-          list(dir).filter(_.getFileName.toString.startsWith(prefix))
-            .sortBy(_.toString)
-            // Spark path-escapes partition dir values ('/' → %2F);
-            // the metadata tuple must carry the TRUE value back
-            .flatMap(d => walk(d,
-              acc :+ org.apache.spark.sql.catalyst.catalog
-                .ExternalCatalogUtils.unescapePathName(
-                  d.getFileName.toString.stripPrefix(prefix))))
+      writeFiles(laid, dataStats, dups)(_.foreach { w =>
+        // rebuild the partition tuple from the __gpart0=v0/__gpart1=v1/...
+        // directory chain; Spark path-escapes partition dir values
+        // ('/' → %2F) and the metadata tuple must carry the TRUE value back
+        val dirs = Iterator.iterate(w.path.getParent)(_.getParent)
+          .take(dups.size).toSeq.reverse
+        val vals = dups.zip(dirs).map { case (dup, d) =>
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(d.getFileName.toString.stripPrefix(s"$dup="))
         }
-      walk(staging, Nil).foreach { case (vals, part) =>
         val pmap = ts.zip(vals).map { case (t, v) => t.partName -> v }.toMap
         val pdir = partitionDirName(pmap)
-        val (rc, m) = stats.getOrElse(part.toString,
-          (footerRowCount(part), Map.empty[Int, ColMetrics]))
         val target = uniqueNumberedFile(dataDir.resolve(pdir),
           s"$pdir-%02d.parquet")
-        Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+        Files.move(w.path, target, StandardCopyOption.REPLACE_EXISTING)
         stagedData :+= DataFileEntry(target.toString, pmap, specId, schemaV,
-          opSeq, rc, metrics = m)
-      }
+          opSeq, w.rows, metrics = w.metrics)
+      })
     }
-    deleteRecursively(staging)
     this
   }
 
@@ -346,8 +323,8 @@ final class GraftTableGenerator(
     *
     * Cost model at 10^7 files: one PARALLELIZED footer sweep (schema
     * check + honest per-file record counts — metadata I/O only, no data
-    * bytes) plus ONE distributed stats job over the adopted files (the
-    * same single-job shape as the bulk-append stats pass). Orphan GC
+    * bytes) plus ONE distributed scan feeding the adopted files' rows to
+    * the per-file stats kernel every write uses ([[FileStats]]). Orphan GC
     * never touches adopted bytes: [[removeOrphanFiles]] walks only the
     * table directory, and adopted files live outside it.
     */
@@ -419,23 +396,8 @@ final class GraftTableGenerator(
           "(an enforced-schema read would return silent NULLs)")
     }
     val countByPath = footers.map { case (p, n, _) => p -> n }.toMap
-    // 2. one distributed stats job over all adopted files (recursive
-    //    lookup kills hive partition inference — physical columns only)
-    val fields = metricFields
-    val statsByPath: Map[String, Map[Int, ColMetrics]] =
-      if (fields.isEmpty) Map.empty
-      else {
-        val aggs = metricAggs(fields)
-        spark.read.schema(schema.struct)
-          .option("recursiveFileLookup", "true")
-          .parquet(paths: _*)
-          .select(col("*"), col("_metadata.file_path").as("_mfp"))
-          .groupBy("_mfp").agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map(r => r.getAs[String]("_mfp").replaceFirst("^file:/+", "/") ->
-            rowToMetrics(fields, r))
-          .toMap
-      }
+    // 2. one distributed stats job over all adopted files
+    val statsByPath = scanMetrics(paths)
     // partition-value honesty: an identity-partitioned file must be
     // single-valued on each partition column AND match its directory
     val fieldIdByName = schema.fields.map(f => f.name -> f.id).toMap
@@ -469,20 +431,20 @@ final class GraftTableGenerator(
     require(transforms.headOption.forall(_.isIdentity),
       "appendEmptyFile passes a literal partition value — identity specs only")
     val opSeq = nextOpSeq()
-    val src = source.getOrElse {
-      val tmp = Files.createTempDirectory("graft-empty")
-      val empty = spark.range(0).select(
-        schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
-      writeSingleFile(empty, tmp.resolve("empty.parquet"))
-      tmp.resolve("empty.parquet")
-    }
     val pdir = dataDir.resolve(partitionValue.toString)
     val target = uniqueNumberedFile(pdir, s"$partitionValue-%02d.parquet")
-    Files.createDirectories(target.getParent)
-    Files.copy(src, target, StandardCopyOption.REPLACE_EXISTING)
+    // honest stats from the file's content under the lying count
+    val metrics = source match {
+      case Some(src) =>
+        Files.copy(src, target, StandardCopyOption.REPLACE_EXISTING)
+        scanMetrics(Seq(target.toString)).getOrElse(target.toString, Map.empty)
+      case None =>
+        writeFile(spark.range(0).select(schema.fields.map(f =>
+          lit(null).cast(f.dataType).as(f.name)): _*), target, dataStats).metrics
+    }
     stagedData :+= DataFileEntry(target.toString,
       Map(partitionCols.head -> partitionValue.toString), specId, schemaV, opSeq, 1L,
-      metrics = fileMetrics(target)) // honest all-null stats under the lying count
+      metrics = metrics)
     this
   }
 
@@ -566,12 +528,11 @@ final class GraftTableGenerator(
           opSeq)
       else {
         val target = deleteFileTarget("delete", partition)
-        writeSingleFile(
-          matches.repartition(1).sortWithinPartitions("file_path", "pos"), target)
+        val w = writeFile(
+          matches.repartition(1).sortWithinPartitions("file_path", "pos"), target,
+          posDeleteStats)
         stagedDeletes :+= DeleteFileEntry(target.toString, partition, "pos",
-          Nil, Nil, opSeq,
-          metrics = deleteColMetrics(target,
-            Seq(DeleteFileEntry.PathFieldId -> "file_path")))
+          Nil, Nil, opSeq, metrics = w.metrics)
       }
     }
     this
@@ -726,10 +687,10 @@ final class GraftTableGenerator(
       }
 
       val target = deleteFileTarget("delete", partition)
-      writeSingleFile(matches.repartition(1).sortWithinPartitions("file_path", "pos"), target)
+      val w = writeFile(matches.repartition(1).sortWithinPartitions("file_path", "pos"),
+        target, posDeleteStats)
       stagedDeletes :+= DeleteFileEntry(target.toString, partition, "pos", Nil, Nil, opSeq,
-        metrics = deleteColMetrics(target,
-          Seq(DeleteFileEntry.PathFieldId -> "file_path")))
+        metrics = w.metrics)
     }
     this
   }
@@ -799,34 +760,25 @@ final class GraftTableGenerator(
   private def stageOrderedTombstones(matches0: DataFrame,
                                      partition: Map[String, String],
                                      opSeq: Long): Unit = {
-    def entryFor(target: Path): DeleteFileEntry =
-      DeleteFileEntry(target.toString, partition, "pos", Nil, Nil, opSeq,
-        metrics = deleteColMetrics(target,
-          Seq(DeleteFileEntry.PathFieldId -> "file_path")))
+    def stage(w: WrittenFile, target: Path): Unit =
+      stagedDeletes :+= DeleteFileEntry(target.toString, partition, "pos", Nil, Nil,
+        opSeq, metrics = w.metrics)
     val thr = GraftTableGenerator.deleteSplitThreshold(spark)
     val matches = matches0.localCheckpoint()
     val n = matches.count()
     if (n <= thr) {
       val target = deleteFileTarget("delete", partition)
-      writeSingleFile(matches.repartition(1)
-        .sortWithinPartitions("file_path", "pos"), target)
-      stagedDeletes :+= entryFor(target)
+      stage(writeFile(matches.repartition(1)
+        .sortWithinPartitions("file_path", "pos"), target, posDeleteStats), target)
     } else {
       val parts = math.min(((n + thr - 1) / thr).toInt, 512)
-      val staging = Files.createTempDirectory(tableDir, ".delsplit")
-      try {
-        matches.repartitionByRange(parts, col("file_path"), col("pos"))
-          .sortWithinPartitions("file_path", "pos")
-          .write.options(props).mode("overwrite").parquet(staging.toString)
-        listDir(staging).filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.toString).foreach { part =>
-            if (footerRowCount(part) > 0) {
-              val target = deleteFileTarget("delete", partition)
-              Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-              stagedDeletes :+= entryFor(target)
-            }
-          }
-      } finally deleteRecursively(staging)
+      writeFiles(matches.repartitionByRange(parts, col("file_path"), col("pos"))
+          .sortWithinPartitions("file_path", "pos"), posDeleteStats)(
+        _.filter(_.rows > 0).foreach { w =>
+          val target = deleteFileTarget("delete", partition)
+          Files.move(w.path, target, StandardCopyOption.REPLACE_EXISTING)
+          stage(w, target)
+        })
     }
   }
 
@@ -939,12 +891,11 @@ final class GraftTableGenerator(
       val matches = rawScan(files).where(pred)
         .select(schema.names.map(col) ++ canonicalKeys: _*)
       val target = deleteFileTarget("eqdelete", partition)
-      writeSingleFile(matches, target)
+      val w = writeFile(matches, target, eqDeleteStats(keyCols))
       stagedDeletes :+= DeleteFileEntry(target.toString, partition, "eq", keyCols,
         keyCols.map(schema.fieldId), opSeq,
         keyColsWritten = keyCols.map(k => s"_dk${schema.fieldId(k)}"),
-        metrics = deleteColMetrics(target,
-          keyCols.map(k => schema.fieldId(k) -> s"_dk${schema.fieldId(k)}")))
+        metrics = w.metrics)
     }
     this
   }
@@ -994,11 +945,12 @@ final class GraftTableGenerator(
           uniqueNumberedFile(dataDir.resolve(partitionString),
             s"$partitionString-%02d.parquet")
         else uniqueNumberedFile(dataDir, "%02d.parquet")
-      writeSingleFile(ordered(rows.select(schema.names.map(col): _*)), target)
-      // real count from the just-written footer (driver-side, no job) —
-      // readers still never TRUST it, but row-lineage assignment needs it
+      // real count from the write tasks — readers still never TRUST it,
+      // but row-lineage assignment needs it
+      val w = writeFile(ordered(rows.select(schema.names.map(col): _*)), target,
+        dataStats)
       stagedData :+= DataFileEntry(target.toString, partition, specId, schemaV,
-        opSeq, footerRowCount(target), metrics = fileMetrics(target))
+        opSeq, w.rows, metrics = w.metrics)
     }
   }
 
@@ -1029,12 +981,12 @@ final class GraftTableGenerator(
     val slices = partitionSlices(df)
     val target = deleteFileTarget("eqdelete", Map.empty)
     val canonicalKeys = keyCols.map(k => col(k).as(s"_dk${schema.fieldId(k)}"))
-    writeSingleFile(df.select(schema.names.map(col) ++ canonicalKeys: _*), target)
+    val w = writeFile(df.select(schema.names.map(col) ++ canonicalKeys: _*), target,
+      eqDeleteStats(keyCols))
     stagedDeletes :+= DeleteFileEntry(target.toString, Map.empty, "eq", keyCols,
       keyCols.map(schema.fieldId), delSeq,
       keyColsWritten = keyCols.map(k => s"_dk${schema.fieldId(k)}"),
-      metrics = deleteColMetrics(target,
-        keyCols.map(k => schema.fieldId(k) -> s"_dk${schema.fieldId(k)}")))
+      metrics = w.metrics)
     appendSlices(slices)
     this
   }
@@ -1051,13 +1003,13 @@ final class GraftTableGenerator(
     val target = deleteFileTarget("eqdelete", Map.empty)
     val keys = df.select(keyCols.map(col): _*)
       .na.drop("any", keyCols).distinct()
-    writeSingleFile(keys.select(keyCols.map(col) ++
-      keyCols.map(k => col(k).as(s"_dk${schema.fieldId(k)}")): _*), target)
+    val w = writeFile(keys.select(keyCols.map(col) ++
+      keyCols.map(k => col(k).as(s"_dk${schema.fieldId(k)}")): _*), target,
+      eqDeleteStats(keyCols))
     stagedDeletes :+= DeleteFileEntry(target.toString, Map.empty, "eq", keyCols,
       keyCols.map(schema.fieldId), delSeq,
       keyColsWritten = keyCols.map(k => s"_dk${schema.fieldId(k)}"),
-      metrics = deleteColMetrics(target,
-        keyCols.map(k => schema.fieldId(k) -> s"_dk${schema.fieldId(k)}")))
+      metrics = w.metrics)
     this
   }
 
@@ -1331,12 +1283,11 @@ final class GraftTableGenerator(
     if (!affected.isEmpty) {
       val delSeq = nextOpSeq()
       val target = deleteFileTarget("eqdelete", Map.empty)
-      writeSingleFile(affected, target)
+      val w = writeFile(affected, target, eqDeleteStats(keyCols))
       stagedDeletes :+= DeleteFileEntry(target.toString, Map.empty, "eq", keyCols,
         keyCols.map(schema.fieldId), delSeq,
         keyColsWritten = keyCols.map(k => s"_dk${schema.fieldId(k)}"),
-        metrics = deleteColMetrics(target,
-          keyCols.map(k => schema.fieldId(k) -> s"_dk${schema.fieldId(k)}")))
+        metrics = w.metrics)
     }
     // SQL assignment is SIMULTANEOUS (every SET expression evaluates
     // against the original row), so NMBS assignments go into ONE projection
@@ -1492,11 +1443,9 @@ final class GraftTableGenerator(
           uniqueNumberedFile(dataDir.resolve(partitionString),
             s"$partitionString-%02d.parquet")
         else uniqueNumberedFile(dataDir, "%02d.parquet")
-      val rows = merged.count()
-      writeSingleFile(merged, target)
+      val w = writeFile(merged, target, dataStats)
       stagedData :+= DataFileEntry(target.toString, partition, specId, schemaV,
-        opSeq, rows, metrics = fileMetrics(target),
-        lineageInFile = groupHasLineage)
+        opSeq, w.rows, metrics = w.metrics, lineageInFile = groupHasLineage)
       stagedRemovedData ++= files.map(_.path)
       stagedRemovedDeletes ++=
         st.deleteFiles.filter(_.partition == partition).map(_.path)
@@ -1593,13 +1542,11 @@ final class GraftTableGenerator(
         .parquet(fs.map(_.path): _*)
         .dropDuplicates("file_path", "pos")
       val target = deleteFileTarget("delete", partition)
-      writeSingleFile(
+      val w = writeFile(
         tombstones.repartition(1).sortWithinPartitions("file_path", "pos"),
-        target)
+        target, posDeleteStats)
       stagedDeletes :+= DeleteFileEntry(target.toString, partition, "pos",
-        Nil, Nil, fs.map(_.seq).max,
-        metrics = deleteColMetrics(target,
-          Seq(DeleteFileEntry.PathFieldId -> "file_path")))
+        Nil, Nil, fs.map(_.seq).max, metrics = w.metrics)
       stagedRemovedDeletes ++= fs.map(_.path)
     }
     this
@@ -1754,11 +1701,10 @@ final class GraftTableGenerator(
     val rows = merged.withColumn("cardinality",
       expr("aggregate(words, 0L, (acc, w) -> acc + bit_count(w))"))
     val target = deleteFileTarget("dv", partition)
-    writeSingleFile(rows.repartition(1).sortWithinPartitions("file_path"), target)
+    val w = writeFile(rows.repartition(1).sortWithinPartitions("file_path"), target,
+      posDeleteStats)
     stagedDeletes :+= DeleteFileEntry(target.toString, partition, "dv",
-      Nil, Nil, seq,
-      metrics = deleteColMetrics(target,
-        Seq(DeleteFileEntry.PathFieldId -> "file_path")))
+      Nil, Nil, seq, metrics = w.metrics)
     stagedRemovedDeletes ++= oldCommitted.map(_.path)
   }
 
@@ -1877,12 +1823,10 @@ final class GraftTableGenerator(
             uniqueNumberedFile(dataDir.resolve(partitionString),
               s"$partitionString-%02d.parquet")
           else uniqueNumberedFile(dataDir, "%02d.parquet")
-        val sliceRows = math.min(rows - i.toLong * rowsPerFile, rowsPerFile.toLong)
-        writeSingleFile(slice.select(schema.names.map(col) ++ lineageCols: _*),
-          target)
+        val w = writeFile(slice.select(schema.names.map(col) ++ lineageCols: _*),
+          target, dataStats)
         stagedData :+= DataFileEntry(target.toString, partition, specId, schemaV,
-          opSeq, sliceRows, metrics = fileMetrics(target),
-          lineageInFile = groupHasLineage)
+          opSeq, w.rows, metrics = w.metrics, lineageInFile = groupHasLineage)
       }
       stagedRemovedData ++= files.map(_.path)
       stagedRemovedDeletes ++=
@@ -2508,115 +2452,42 @@ final class GraftTableGenerator(
     props.get("write.bloom.columns").iterator
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
 
-  private def bloomFields(fields: Seq[GraftField]): Seq[GraftField] = {
-    val enabled = bloomCols ++ propBloomCols
-    fields.filter(f => enabled(f.name) && graft.meta.BloomFilter.supported(f.dataType))
+  /** Stats columns of a data file: every [[metricFields]] column, with the
+    * Bloom bitset where enabled ([[withBloomFilters]] or the
+    * `write.bloom.columns` property) and the type supports it. */
+  private def dataStats: Seq[StatCol] = {
+    val bloomOn = bloomCols ++ propBloomCols
+    metricFields.map(f => StatCol(f.id, f.name, f.dataType,
+      bloom = bloomOn(f.name) && BloomFilter.supported(f.dataType)))
   }
 
-  /** 16 `bit_or` lanes accumulating the [[graft.meta.BloomFilter]] bitset
-    * for one column: per row, ONE `xxhash64` of the canonical string fans
-    * to 3 probe positions (Kirsch–Mitzenmacher `h + j*((h >>> 33) | 1)`,
-    * Java overflow wrap on both write and plan side) and each lane ORs in
-    * the bits that fall in its 64-bit window. Pure codegen'd expressions
-    * inside the same single-pass stats agg as min/max — no extra scan. */
-  private def bloomLaneAggs(f: GraftField): Seq[Column] = {
-    val nb = graft.meta.BloomFilter.NumBits
-    val h = s"xxhash64(cast(`${f.name}` as string))"
-    val h2 = s"(shiftrightunsigned($h, 33) | 1L)"
-    (0 until graft.meta.BloomFilter.NumLanes).map { l =>
-      val terms = (0 until graft.meta.BloomFilter.NumHash).map { j =>
-        val pos = s"pmod($h + ${j}L * $h2, ${nb}L)"
-        s"if(($pos div 64) = $l, shiftleft(1L, cast($pos % 64 as int)), 0L)"
-      }
-      coalesce(expr(s"bit_or(if(`${f.name}` is null, 0L, ${terms.mkString(" | ")}))"),
-        lit(0L)).as(s"_bf_${f.id}_$l")
-    }
+  /** A positional or vector delete file's referenced-path bounds — the
+    * stats that let the planner skip delete files a pruned scan cannot
+    * touch. */
+  private val posDeleteStats =
+    Seq(StatCol(DeleteFileEntry.PathFieldId, "file_path", StringType))
+
+  /** An equality-delete file's key envelopes, keyed by the key's field id
+    * and read from its canonical `_dk<fieldId>` column. */
+  private def eqDeleteStats(keyCols: Seq[String]): Seq[StatCol] = keyCols.map { k =>
+    val f = schema.fields.find(_.name == k).get
+    StatCol(f.id, s"_dk${f.id}", f.dataType)
   }
 
-  private def metricAggs(fields: Seq[GraftField]): Seq[Column] =
-    fields.flatMap(f => Seq(
-      min(col(f.name)).cast("string").as(s"_mn_${f.id}"),
-      max(col(f.name)).cast("string").as(s"_mx_${f.id}"),
-      coalesce(sum(when(col(f.name).isNull, 1L).otherwise(0L)), lit(0L))
-        .as(s"_nc_${f.id}"))) ++
-      bloomFields(fields).flatMap(bloomLaneAggs)
-
-  private def rowToMetrics(fields: Seq[GraftField], r: Row): Map[Int, ColMetrics] = {
-    val withBloom = bloomFields(fields).map(_.id).toSet
-    fields.map { f =>
-      f.id -> ColMetrics(
-        Option(r.getAs[String](s"_mn_${f.id}")),
-        Option(r.getAs[String](s"_mx_${f.id}")),
-        r.getAs[Long](s"_nc_${f.id}"),
-        bloom =
-          if (!withBloom(f.id)) None
-          else Some(graft.meta.BloomFilter.render(
-            Array.tabulate(graft.meta.BloomFilter.NumLanes)(l =>
-              r.getAs[Long](s"_bf_${f.id}_$l")))))
-    }.toMap
-  }
-
-  /** Min/max/null-count of the file JUST written — one tiny job re-reading
-    * the single file (stats come from actual content, never declared
-    * counts, so the lying empty file carries honest all-null stats). A
-    * production writer accumulates these inside the appender during the
-    * write itself; per-file re-read is the scenario-scale equivalent, and
-    * the bulk path ([[bulkMetrics]]) does it in ONE job for all files. */
-  private def fileMetrics(target: Path): Map[Int, ColMetrics] = {
-    val fields = metricFields
-    if (fields.isEmpty) return Map.empty
-    val df = spark.read.schema(schema.struct).parquet(target.toString)
-    val aggs = metricAggs(fields)
-    rowToMetrics(fields, df.agg(aggs.head, aggs.tail: _*).head())
-  }
-
-  /** Min/max/null-count of selected columns of a delete file JUST written
-    * (keyed by caller-chosen metric ids: equality-key field ids for eq
-    * deletes, [[DeleteFileEntry.PathFieldId]] for a pos file's referenced
-    * paths) — the stats that let the scan planner skip delete files that
-    * cannot intersect a pruned scan. Same honest-content contract as
-    * [[fileMetrics]]. */
-  private def deleteColMetrics(target: Path,
-                               idCols: Seq[(Int, String)]): Map[Int, ColMetrics] = {
-    if (idCols.isEmpty) return Map.empty
-    val df = spark.read.parquet(target.toString)
-    val aggs = idCols.flatMap { case (fid, c) => Seq(
-      min(col(c)).cast("string").as(s"_mn_$fid"),
-      max(col(c)).cast("string").as(s"_mx_$fid"),
-      coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L))
-        .as(s"_nc_$fid"))
-    }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    idCols.map { case (fid, _) =>
-      fid -> ColMetrics(
-        Option(r.getAs[String](s"_mn_$fid")),
-        Option(r.getAs[String](s"_mx_$fid")),
-        r.getAs[Long](s"_nc_$fid"))
-    }.toMap
-  }
-
-  /** Metrics for every part file in a staging dir in ONE Spark job
-    * (groupBy `_metadata.file_path`) — the 100 TB shape: stats collection
-    * scales with the write parallelism, not the file count. Keys are
-    * normalized absolute paths of the STAGING files (callers look up before
-    * moving each part to its target). */
-  /** Per staged file: (row count, column metrics) — ONE job for the whole
-    * staging dir. The row count rides the same aggregate so a 10⁴-file
-    * bulk append never pays 10⁴ sequential driver-side footer opens
-    * (measured ~15 ms each — minutes at 10⁵ partitions). */
-  private def bulkMetrics(staging: Path): Map[String, (Long, Map[Int, ColMetrics])] = {
-    val fields = metricFields
-    val aggs = count(lit(1L)).as("_rc") +:
-      (if (fields.isEmpty) Nil else metricAggs(fields))
-    spark.read.parquet(staging.toString)
-      .select(col("*"), col("_metadata.file_path").as("_mfp"))
-      .groupBy("_mfp").agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getAs[String]("_mfp").replaceFirst("^file:/+", "/") ->
-        (r.getAs[Long]("_rc"),
-          if (fields.isEmpty) Map.empty[Int, ColMetrics]
-          else rowToMetrics(fields, r)))
-      .toMap
+  /** Data-file metrics of EXISTING files (adopted or copied in — bytes no
+    * write of ours produced): one scan feeding the same per-file kernel
+    * the write tasks run ([[FileStats.scan]]). Keys are normalized
+    * absolute paths. */
+  private def scanMetrics(paths: Seq[String]): Map[String, Map[Int, ColMetrics]] = {
+    val stats = dataStats
+    if (stats.isEmpty) Map.empty
+    else FileStats.scan(
+      // recursive lookup kills hive partition inference — physical columns only
+      spark.read.schema(schema.struct).option("recursiveFileLookup", "true")
+        .parquet(paths: _*)
+        .select(stats.map(c => col(c.name)) :+
+          MorReader.normPath(col("_metadata.file_path")).as("_mfp"): _*),
+      "_mfp", stats)
   }
 
   /** Directory fragment for a partition tuple. Values are PATH-ESCAPED
@@ -2634,17 +2505,6 @@ final class GraftTableGenerator(
       uniqueNumberedFile(dataDir.resolve(partitionString),
         s"$kind-$partitionString-%02d.parquet")
     else uniqueNumberedFile(dataDir, s"$kind-%02d.parquet")
-  }
-
-  /** Row count from the Parquet footer of a just-written file — driver-side
-    * metadata I/O (no Spark job), the honest count row-lineage assignment
-    * and the manifest fast paths need. */
-  private def footerRowCount(target: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(target.toString),
-      spark.sessionState.newHadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
   }
 
   /** `%02d`-numbered probe-until-free naming (reference
@@ -2716,20 +2576,31 @@ final class GraftTableGenerator(
     }
   }
 
-  /** Write `df` as exactly one Parquet file at `target` (write-temp + move;
-    * Parquet layout knobs from table props — reference
+  /** The one physical write: ONE Spark job lays `df` out as Parquet in a
+    * fresh staging dir under the table (`partitionBy` directories when
+    * given; Parquet layout knobs from table props — reference
     * `IcebergTableGenerator.java:397-424`, PARQUET_1_0 is Spark's default
-    * writer version). */
-  private def writeSingleFile(df: DataFrame, target: Path): Unit = {
-    val tmp = Files.createTempDirectory(target.getParent.getFileName.toString)
-    try {
-      df.coalesce(1).write.options(props).mode("overwrite").parquet(tmp.toString)
-      val found = listDir(tmp).find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for $target"))
-      Files.createDirectories(target.getParent)
-      Files.move(found, target, StandardCopyOption.REPLACE_EXISTING)
-    } finally deleteRecursively(tmp)
+    * writer version) and its tasks return every file with its row count
+    * and `stats` metrics ([[FileStats.write]] — the reference's
+    * `withMetrics(appender.metrics())`, `IcebergTableGenerator.java:414-422`).
+    * `place` moves the files it keeps out of the staging dir, which is
+    * removed afterwards. */
+  private def writeFiles[T](df: DataFrame, stats: Seq[StatCol],
+                            partitionBy: Seq[String] = Nil)
+                           (place: Seq[WrittenFile] => T): T = {
+    val staging = Files.createTempDirectory(tableDir, ".staging")
+    try place(FileStats.write(df, staging, partitionBy, props, stats))
+    finally deleteRecursively(staging)
   }
+
+  /** [[writeFiles]] of `df` as exactly one file, moved to `target`. */
+  private def writeFile(df: DataFrame, target: Path, stats: Seq[StatCol]): WrittenFile =
+    writeFiles(df.coalesce(1), stats) {
+      case Seq(w) =>
+        Files.move(w.path, target, StandardCopyOption.REPLACE_EXISTING)
+        w.copy(path = target)
+      case ws => sys.error(s"expected one parquet part for $target, got ${ws.size}")
+    }
 
   /** Files.list with the stream closed (it holds a directory fd open). */
   private def listDir(dir: Path): Seq[Path] = {

@@ -190,6 +190,47 @@ class CatalogSpec extends SparkSpec {
       .collect()(0).getLong(0) == 150L)
   }
 
+  test("DELETE … BETWEEN deletes what >= AND <= deletes, by the same " +
+      "metadata-tier range route") {
+    val shapes = Seq("t_betw" -> "product_id BETWEEN 0 AND 74",
+      "t_betw_cmp" -> "product_id >= 0 AND product_id <= 74")
+    val outcomes = shapes.map { case (name, where) =>
+      val g = fresh(name)
+      spark.sql(s"DELETE FROM graft.db.$name WHERE $where")
+      val last = SnapshotLog(g.tableDir.toString).load().mainOnly.snapshots.last
+      // [0, 49] drops as pure metadata; [50, 99] only overlaps → tombstones
+      (last.removedDataFiles.size, last.deleteFiles.size,
+        spark.sql(s"SELECT CAST(product_id AS BIGINT) FROM graft.db.$name")
+          .collect().map(_.getLong(0)).sorted.toSeq)
+    }
+    assert(outcomes(0) == outcomes(1))
+    assert(outcomes(0)._1 == 1 && outcomes(0)._2 == 1, outcomes(0).toString)
+    assert(outcomes(0)._3 == (75L until 200L))
+  }
+
+  test("MERGE with a partial SET / INSERT column list keeps the unassigned " +
+      "target columns (partitioned and unpartitioned)") {
+    import org.apache.spark.sql.types._
+    Seq("t_mpart_flat" -> Nil, "t_mpart_part" -> Seq("c")).foreach { case (name, parts) =>
+      val g = new GraftTableGenerator(spark, s"$wh/db", name)
+      g.create(graft.schema.GraftSchema.of(
+        "k" -> LongType, "c" -> LongType, "p" -> LongType), parts)
+      import spark.implicits._
+      g.appendData(Seq((1L, 10L, 100L), (2L, 20L, 200L)).toDF("k", "c", "p")).commit()
+      Seq((1L, 99L, 555L), (3L, 33L, 333L)).toDF("k", "c", "p")
+        .createOrReplaceTempView("mpart_src")
+      spark.sql(
+        s"""MERGE INTO graft.db.$name t USING mpart_src s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET p = s.p
+           |WHEN NOT MATCHED THEN INSERT (k, c) VALUES (s.k, s.c)
+           |""".stripMargin)
+      val got = spark.sql(s"SELECT k, c, p FROM graft.db.$name").collect()
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)))).toSet
+      assert(got == Set((1L, 10L, Some(555L)), (2L, 20L, Some(200L)),
+        (3L, 33L, None)), s"$name: $got")
+    }
+  }
+
   test("DELETE FROM with an arbitrary condition writes positional deletes") {
     val g = fresh("t_del2")
     spark.sql("DELETE FROM graft.db.t_del2 WHERE product_id % 10 = 3")
