@@ -316,11 +316,13 @@ object Dedup {
         val obs = next.observe(obsName,
           sum(col("lbl").cast("decimal(38,0)")).as("ls"))
         labels = obs.localCheckpoint()
-        // defensive fallback: if the metric did not materialize (empty
-        // frame edge case), fall back to the explicit probe — identical
-        // semantics, one extra bounded action
+        // fallback: if the metric did not materialize, or its sum is null
+        // (an empty frame observes Row(null)), take the explicit probe —
+        // identical semantics, one extra bounded action. An empty label
+        // set sums to null there too, and null == null reads as converged:
+        // right, since there is nothing to propagate.
         val s = obs.queryExecution.observedMetrics.get(obsName)
-          .map(_.getDecimal(0)).getOrElse(labelSum(labels))
+          .flatMap(r => Option(r.getDecimal(0))).getOrElse(labelSum(labels))
         converged = s == prevSum
         prevSum = s
       } else labels = next.localCheckpoint()

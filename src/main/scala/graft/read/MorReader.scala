@@ -1,7 +1,5 @@
 package graft.read
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,8 +28,10 @@ import graft.schema.GraftSchema
   * Scale notes: planning is metadata-scale (driver filters the file list —
   * the manifest-pruning analog); delete sets join via equi-keys so Spark
   * picks broadcast-hash for small delete files and shuffle-hash/SMJ for
-  * giant ones (S6's ~10^8-entry file) under AQE; the file→seq map is a
-  * broadcast join keyed on `_metadata.file_path`.
+  * giant ones (S6's ~10^8-entry file) under AQE; per-file constants
+  * (sequence number, first row id, partition scope) are stamped onto rows
+  * by an in-row lookup keyed on the normalized `_metadata.file_path`
+  * ([[FileConsts]]) — metadata the driver already holds, never a join.
   */
 object MorReader {
 
@@ -186,42 +186,7 @@ object MorReader {
   def readValues(spark: SparkSession, tableDir: String, colName: String,
                  values: Seq[String]): DataFrame = {
     require(values.nonEmpty, "readValues needs at least one probe value")
-    val st = SnapshotLog(tableDir).load().mainOnly
-    val live = st.schema
-    val fieldOpt = live.fields.find(_.name == colName)
-    val keep: DataFileEntry => Boolean = f => fieldOpt.forall { field =>
-      val statsOk = f.metrics.get(field.id).forall { m =>
-        values.exists { v =>
-          val envOk = (m.min, m.max) match {
-            case (Some(mn), Some(mx)) =>
-              cmpMetric(field.dataType, mx, v).forall(_ >= 0) &&
-                cmpMetric(field.dataType, mn, v).forall(_ <= 0)
-            case _ => false // all-NULL column: no value can match
-          }
-          envOk && m.bloom.forall(b => graft.meta.BloomFilter.mightContain(b, v))
-        }
-      }
-      // hidden-partition pruning: if the file's spec epoch TRANSFORMS this
-      // column (bucket/truncate/day — graft.meta.PartitionTransform), map
-      // each probe value through the transform and require the file's
-      // partition value to match one. Missing spec/partName/unsupported
-      // type keeps the file — never unsound.
-      val partOk = st.specs.get(f.specId).forall { specStrs =>
-        specStrs.map(graft.meta.PartitionTransform.parse)
-          .find(_.source == colName).forall { t =>
-            f.partition.get(t.partName).forall { pv =>
-              values.exists(v => t.apply(v, field.dataType).forall(_ == pv))
-            }
-          }
-      }
-      statsOk && partOk
-    }
-    val rowPred = fieldOpt.map { field =>
-      values.map(v => col(colName) === lit(v).cast(field.dataType)).reduce(_ || _)
-    }.getOrElse(lit(true))
-    withMeta(spark, st, live, Map.empty, Map.empty, keep)
-      .where(rowPred)
-      .select(live.names.map(col): _*)
+    read(spark, tableDir, None, Map.empty, pointValues = Map(colName -> values.toSet))
   }
 
   /** Partition-pruned read: `filter` maps partition col → allowed values
@@ -1202,7 +1167,7 @@ object MorReader {
           extraKeyFields.map { case (kid, f) => resolve(f.copy(id = kid), s"_gk$kid") }
       // rewritten (compacted) files carry their rows' ORIGINAL row ids and
       // last-updated seqs as physical columns — read them back; plain
-      // files derive both from the manifest after the seq-map join below
+      // files derive both from the manifest by the seq lookup below
       val readSchema =
         if (lin) StructType(epoch.struct.fields ++ Seq(
           StructField(RowIdCol, LongType), StructField(LastSeqCol, LongType)))
@@ -1217,34 +1182,31 @@ object MorReader {
           :+ col("_metadata.row_index").as(PosCol): _*)
     }.reduce(_.unionByName(_))
 
-    // file → (sequence number, first row id) map: tiny, broadcast
-    // (SURVEY.md §7.4.1); row id = firstRowId + position (Iceberg v3)
-    val seqMap = spark.createDataFrame(
-      dataFiles.map(f => (f.path, f.seq, f.firstRowId)))
-      .toDF("_m_fp", "_m_seq", "_m_frid")
-    var data = scan.join(broadcast(seqMap), col(FilePathCol) === col("_m_fp"), "left")
-      .withColumn(SeqCol, coalesce(col("_m_seq"), lit(0L)))
+    // file → sequence number and first row id, stamped in-row from the
+    // planned entries (row id = firstRowId + position, Iceberg v3; a
+    // negative firstRowId means the file has no lineage)
+    val seqOf = FileConsts.longs(dataFiles.map(f => f.path -> f.seq))
+    val firstRowIdOf = FileConsts.longs(
+      dataFiles.filter(_.firstRowId >= 0).map(f => f.path -> f.firstRowId))
+    var data = scan
+      .withColumn(SeqCol, coalesce(seqOf(col(FilePathCol)), lit(0L)))
       .withColumn(RowIdCol, coalesce(col(RowIdCol),
-        when(col("_m_frid") >= 0, col("_m_frid") + col(PosCol))))
+        firstRowIdOf(col(FilePathCol)) + col(PosCol)))
       .withColumn(LastSeqCol, coalesce(col(LastSeqCol), col(SeqCol)))
-      .drop("_m_fp", "_m_seq", "_m_frid")
 
     // ---- positional deletes: anti-join on (path, pos) -------------------
     // ONE scan over all pos-delete files (S9 has 100 of them — a per-file
     // or per-seq union would put 100 branches in the plan); each delete
-    // row learns its file's sequence number via a broadcast path→seq map.
+    // row reads its file's sequence number from an in-row path → seq lookup.
     val posFiles = deleteFiles.filter(_.kind == "pos")
     if (posFiles.nonEmpty) {
-      val posSeqMap = spark.createDataFrame(posFiles.map(f => (f.path, f.seq)))
-        .toDF("_df_path", "_d_seq")
+      val posSeqOf = FileConsts.longs(posFiles.map(f => f.path -> f.seq))
       val dels = spark.read
         .schema(StructType(Seq(StructField("file_path", StringType),
           StructField("pos", LongType))))
         .parquet(posFiles.map(_.path): _*)
         .select(col("file_path").as("_d_fp"), col("pos").as("_d_pos"),
-          normPath(col("_metadata.file_path")).as("_d_src"))
-        .join(broadcast(posSeqMap), col("_d_src") === col("_df_path"))
-        .select(col("_d_fp"), col("_d_pos"), col("_d_seq"))
+          posSeqOf(normPath(col("_metadata.file_path"))).as("_d_seq"))
       data = data.join(dels,
         col(FilePathCol) === col("_d_fp") && col(PosCol) === col("_d_pos") &&
           col("_d_seq") >= col(SeqCol),
@@ -1317,9 +1279,9 @@ object MorReader {
     // ONE multi-path scan per key set: eq-delete files carry canonical
     // `_dk<fieldId>` key columns written at delete time (field ids are
     // stable across schema epochs), so 100 delete commits on the same keys
-    // are 1 FileScan, not 100 plan branches. Each delete row learns its
-    // file's sequence number and partition scope from a broadcast
-    // path→(seq, partition) map — the exact shape of the pos-delete path.
+    // are 1 FileScan, not 100 plan branches. Each delete row reads its
+    // file's sequence number and partition scope from in-row path lookups
+    // — the exact shape of the pos-delete path.
     def keyDataType(kid: Int): DataType = fieldTypeById(kid)
     val eqFiles = deleteFiles.filter(_.kind == "eq")
     eqFiles.groupBy(_.equalityIds.sorted).toSeq.sortBy(_._1.mkString(",")).foreach {
@@ -1344,9 +1306,6 @@ object MorReader {
         }
         val delSchema = StructType(keyIds.map(kid =>
           StructField(s"_dk$kid", keyDataType(kid))))
-        val metaSchema = StructType(
-          StructField("_df_path", StringType) +: StructField("_d_seq", LongType) +:
-            partCols.map(p => StructField(s"_dp_$p", StringType)))
         def legacyRead(f: graft.meta.DeleteFileEntry) = {
           val byId = f.equalityIds.zip(f.equalityCols).toMap
           spark.read.parquet(f.path)
@@ -1359,26 +1318,23 @@ object MorReader {
              Seq(spark.read.schema(delSchema).parquet(canonical.map(_.path): _*)
                .withColumn("_d_src0", normPath(col("_metadata.file_path"))))
            else Nil) ++ legacy.map(legacyRead)
-        val metaRows = fs.map(f => org.apache.spark.sql.Row.fromSeq(
-          f.path +: f.seq +: partCols.map(p => f.partition.get(p).orNull)))
-        val seqPartMap = spark.createDataFrame(metaRows.asJava, metaSchema)
+        val src = col("_d_src0")
+        val eqSeqOf = FileConsts.longs(fs.map(f => f.path -> f.seq))
         val dels = scans.reduce(_.unionByName(_))
-          .join(broadcast(seqPartMap), col("_d_src0") === col("_df_path"))
-          .drop("_d_src0", "_df_path")
+          .select(keyIds.map(kid => col(s"_dk$kid")) ++
+            (eqSeqOf(src).as("_d_seq") +: partCols.map(p =>
+              FileConsts.strings(fs.flatMap(f => f.partition.get(p).map(f.path -> _)))(src)
+                .as(s"_dp_$p"))): _*)
         // Partition-scope condition. Identity scopes (the partition key IS
         // a data column) compare ROW values — a pre-evolution file's rows
         // still match a later scoped delete by value. Hidden-transform
         // scopes (`id_bucket` etc. — graft.meta.PartitionTransform) have
         // no data column; the scope is the data FILE's registered
-        // partition value, joined in from the log per path (broadcast,
-        // metadata-scale).
+        // partition value, read from the log per path (in-row lookup).
         val fileScope = partCols.filterNot(live.names.contains)
-        var dataJ = data
-        fileScope.foreach { p =>
-          dataJ = dataJ.join(broadcast(spark.createDataFrame(
-              dataFiles.map(f => (f.path, f.partition.get(p).orNull)))
-              .toDF("_fp_path", s"_fp_$p")),
-            dataJ(FilePathCol) === col("_fp_path"), "left").drop("_fp_path")
+        val dataJ = fileScope.foldLeft(data) { (d, p) =>
+          d.withColumn(s"_fp_$p", FileConsts.strings(
+            dataFiles.flatMap(f => f.partition.get(p).map(f.path -> _)))(col(FilePathCol)))
         }
         val keyCond = keyIds.map(kid => dataJ(keyDataCol(kid)) === dels(s"_dk$kid"))
           .reduce(_ && _)

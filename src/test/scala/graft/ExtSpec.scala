@@ -626,6 +626,20 @@ class ExtSpec extends SparkSpec {
     assert(lbl1(4L) == 3L && lbl1(3L) == 2L && lbl1(2L) == 1L)
   }
 
+  test("clusterLabels: empty input and edgeless input converge to identity labels") {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    // empty frame: the observed label sum is Row(null) — the explicit probe
+    // takes over and the empty result comes back
+    val empty = Dedup.clusterLabels(Seq.empty[Long].toDF("id"), none, "id", iters = 4)
+    assert(empty.collect().isEmpty)
+    assert(empty.columns.toSeq == Seq("id", "lbl"))
+    // nodes without a single edge: every node is its own cluster
+    val lone = Dedup.clusterLabels((1L to 5L).toDF("id"), none, "id", iters = 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lone == (1L to 5L).map(i => i -> i).toMap)
+  }
+
   test("redactPii scrubs planted emails/phones and leaves clean text alone") {
     import spark.implicits._
     import graft.ext.TextOps

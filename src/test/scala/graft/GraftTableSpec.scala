@@ -550,6 +550,42 @@ class GraftTableSpec extends SparkSpec {
     assert(g.removeOrphanFiles().isEmpty) // idempotent: nothing left
   }
 
+  test("readValues plans exactly like read(pointValues): same files, same rows (bloom and bucket tables)") {
+    import org.apache.spark.sql.types._
+    val gb = new GraftTableGenerator(spark, wh, "pv_bloom")
+    gb.create(graft.schema.GraftSchema.of("id" -> LongType, "tok" -> StringType), Nil)
+      .withBloomFilters("tok")
+    for (i <- 0 until 4)
+      gb.appendData(spark.range(i * 50L, (i + 1) * 50L).toDF("id")
+        .withColumn("tok", when(col("id") % 50 === 0, lit("aaa"))
+          .otherwise(concat(lit("key_"), lit(i))))).commit()
+    gb.positionalDelete(col("id") % 7 === 0).commit()
+    val gk = new GraftTableGenerator(spark, wh, "pv_bucket")
+    gk.create(graft.schema.GraftSchema.of("id" -> LongType, "val" -> LongType),
+      Seq("bucket(4,id)"))
+    gk.appendData(spark.range(0, 200).toDF("id").withColumn("val", col("id") * 2)).commit()
+    gk.equalityDelete(col("id") % 9 === 0, Seq("id")).commit()
+    def same(g: GraftTableGenerator, c: String, values: Seq[String], files: Int): Unit = {
+      val dir = g.tableDir.toString
+      val a = MorReader.readValues(spark, dir, c, values)
+      val b = MorReader.read(spark, dir, None, Map.empty, pointValues = Map(c -> values.toSet))
+      assert(a.inputFiles.sorted.toSeq == b.inputFiles.sorted.toSeq, s"$c in $values")
+      val dataFiles = a.inputFiles.filterNot(_.split('/').last.contains("delete"))
+      assert(dataFiles.length == files, s"$c in $values: ${a.inputFiles.mkString(",")}")
+      assert(a.collect().map(_.toString).sorted.toSeq ==
+        b.collect().map(_.toString).sorted.toSeq, s"$c in $values")
+    }
+    same(gb, "tok", Seq("key_1"), 1)
+    same(gb, "tok", Seq("key_0", "key_3", "key_missing"), 2)
+    same(gb, "tok", Seq("aaa"), 4)
+    same(gb, "id", Seq("75", "120"), 2)
+    same(gk, "id", Seq("37"), 1)
+    val bucket = graft.meta.PartitionTransform.parse("bucket(4,id)")
+    val probes = Seq("36", "37", "38", "39", "40", "41")
+    same(gk, "id", probes, probes.flatMap(bucket.apply(_, LongType)).distinct.size)
+    same(gk, "val", Seq("74"), 4) // not a partition source: no transform pruning
+  }
+
   test("hidden partition transforms: bucket/truncate/day derive dirs, point reads prune by transform") {
     import org.apache.spark.sql.types._
     import spark.implicits._
