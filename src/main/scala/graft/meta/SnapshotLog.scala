@@ -108,10 +108,11 @@ object BloomFilter {
   * `firstRowId` is Iceberg v3 ROW LINEAGE: the file's rows carry stable
   * row ids `firstRowId + position`, assigned once at commit from the
   * table's monotone counter ([[SnapshotLog.commit]]) and NEVER reassigned.
-  * -1 = unassigned (legacy entries, or unknown record count). Rewritten
+  * -1 = not yet assigned (a staged entry before its commit). Rewritten
   * (compacted) files set `lineageInFile` instead: they carry the original
   * ids MATERIALIZED as physical `_graft_row_id`/`_graft_last_seq` columns,
-  * which is how identity survives compaction.
+  * which is how identity survives compaction. Every committed entry has
+  * one of the two.
   */
 final case class DataFileEntry(
     path: String,
@@ -136,9 +137,8 @@ final case class DataFileEntry(
   *
   * `keyColsWritten` records the physical canonical key column names
   * (`_dk<fieldId>`) the writer put IN the file — the reader trusts it and
-  * plans a single multi-path scan with zero Parquet footer probes. Empty on
-  * entries from logs predating the field (or pos deletes); only those
-  * legacy entries pay a driver-side footer check at plan time.
+  * plans a single multi-path scan with zero Parquet footer probes. Every
+  * equality-delete entry carries it; other kinds leave it empty.
   *
   * `metrics` is the delete-file analog of [[DataFileEntry.metrics]]
   * (Iceberg stores the same bounds on delete manifest entries): for eq
@@ -147,8 +147,8 @@ final case class DataFileEntry(
   * reserved [[DeleteFileEntry.PathFieldId]]. It lets the scan planner skip
   * delete files that cannot intersect the pruned data files — on an
   * S9-shaped table (100 delete files) a pruned scan then applies one or
-  * two delete files instead of all 100 ([[graft.read.MorReader]]). Empty
-  * on entries from logs predating the field → never pruned (sound).
+  * two delete files instead of all 100 ([[graft.read.MorReader]]). An
+  * entry without metrics is never pruned (sound).
   */
 final case class DeleteFileEntry(
     path: String,
@@ -175,8 +175,8 @@ object DeleteFileEntry {
   *
   * `timestampMs` is the commit wall-clock stamp (Iceberg `timestamp-ms` —
   * every snapshot the reference commits through `Transaction
-  * .commitTransaction` carries one); 0 on entries from logs predating the
-  * field. `operation` is the EXPLICIT commit kind, Iceberg-style:
+  * .commitTransaction` carries one). `operation` is the EXPLICIT commit
+  * kind, Iceberg-style:
   * `append` (data files only), `delete` (delete files only), `overwrite`
   * (both — upsert), `replace` (compaction/expiry rebase: added files
   * re-express rows that already existed). Incremental scans branch on it
@@ -273,9 +273,20 @@ final case class TableState(
   *
   * Layout: one `metadata/snap-<id>.json` PER SNAPSHOT, plus
   * `metadata/schema-<v>.json`, `metadata/spec-<id>.json`, and optional
-  * `metadata/refs.json` (named refs / tags). A legacy single-file
-  * `metadata/log.jsonl` (one snapshot per line) is still read — per-file
-  * snapshots are the round-4 commit-protocol upgrade.
+  * `metadata/refs.json` (named refs / tags).
+  *
+  * ONE on-disk format: the fields the current writer always writes. A
+  * snapshot must carry `operation`, `timestampMs` and `nextRowId`; an
+  * equality-delete entry `keyColsWritten`; a data entry `firstRowId` or
+  * `lineageInFile`. Anything else — including the files of older layouts,
+  * [[SnapshotLog.RefusedFiles]] — is refused with an
+  * [[UnsupportedTableFormatException]] naming the table directory and the
+  * missing field or file, never read through a compatibility path (the
+  * Iceberg rule: a reader refuses a format it does not support rather
+  * than guessing). There is deliberately no `format-version` field: no
+  * table written so far carries one, so adding it would need exactly the
+  * fallback this format removes; the refused names and fields are the
+  * version test.
   *
   * Commit atomicity mirrors HadoopCatalog's version-file protocol
   * (reference delegates to Iceberg's `Transaction.commitTransaction`,
@@ -289,31 +300,36 @@ final case class TableState(
   */
 final class SnapshotLog(tableDir: Path) {
   private val metaDir = tableDir.resolve("metadata")
-  private val logFile = metaDir.resolve("log.jsonl")
   private val refsFile = metaDir.resolve("refs.json")
   private val mapper = new ObjectMapper()
 
   private def snapFile(id: Long): Path = metaDir.resolve(s"snap-$id.json")
 
-  /** Committed snapshot ids, from the `snap-*.json` listing alone — no
-    * JSON parse (the legacy `log.jsonl`, if present, contributes its last
-    * line only, parsed once). */
-  private def committedIds(): Seq[Long] = {
-    val fromFiles =
-      if (!Files.exists(metaDir)) Seq.empty
-      else {
-        val s = Files.list(metaDir)
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
-          .map(_.stripPrefix("snap-").stripSuffix(".json").toLong).toSeq
+  /** The names in `metadata/` — the one listing every load, commit and
+    * gate starts from, and where an older layout is refused. */
+  private def metaNames(): Seq[String] =
+    if (!Files.exists(metaDir)) Seq.empty
+    else {
+      val s = Files.list(metaDir)
+      val names = try s.iterator().asScala.map(_.getFileName.toString).toVector
         finally s.close()
-      }
-    val legacyLast =
-      if (!Files.exists(logFile)) Seq.empty
-      else Files.readAllLines(logFile).asScala.filter(_.nonEmpty).lastOption
-        .map(l => mapper.readTree(l).get("id").asLong).toSeq
-    (fromFiles ++ legacyLast).sorted
-  }
+      names.find(SnapshotLog.RefusedFiles.contains).foreach(n =>
+        throw new UnsupportedTableFormatException(
+          s"table $tableDir: metadata/$n belongs to an older snapshot-log " +
+            "format that graft no longer reads; recreate the table"))
+      names
+    }
+
+  /** `(version, path)` of the `<prefix><version>.json` files, ascending. */
+  private def versioned(names: Seq[String], prefix: String): Seq[(Long, Path)] =
+    names.filter(n => n.startsWith(prefix) && n.endsWith(".json"))
+      .map(n => (n.stripPrefix(prefix).stripSuffix(".json").toLong, metaDir.resolve(n)))
+      .sortBy(_._1)
+
+  /** Committed snapshot ids, ascending, from the listing alone. */
+  private def committedIds(): Seq[Long] = versioned(metaNames(), "snap-").map(_._1)
+
+  private def listSnapFiles(): Seq[Path] = versioned(metaNames(), "snap-").map(_._2)
 
   def init(): Unit = Files.createDirectories(metaDir)
 
@@ -351,25 +367,22 @@ final class SnapshotLog(tableDir: Path) {
     }
   }
 
-  def load(): TableState = {
-    val schemas = listVersioned("schema-").map { case (v, p) =>
-      v -> GraftSchema.fromJson(Files.readString(p))
+  /** Schemas, partition specs and snap files, from one listing. */
+  private def listing(): (Map[Int, GraftSchema], Map[Int, Seq[String]], Seq[JsonNode]) = {
+    val names = metaNames()
+    val schemas = versioned(names, "schema-").map { case (v, p) =>
+      v.toInt -> GraftSchema.fromJson(Files.readString(p))
     }.toMap
-    val specs = listVersioned("spec-").map { case (v, p) =>
+    val specs = versioned(names, "spec-").map { case (v, p) =>
       val node = mapper.readTree(Files.readString(p))
-      v -> node.get("partitionCols").elements().asScala.map(_.asText).toSeq
+      v.toInt -> node.get("partitionCols").elements().asScala.map(_.asText).toSeq
     }.toMap
-    val legacy =
-      if (!Files.exists(logFile)) Seq.empty
-      else Files.readAllLines(logFile).asScala.filter(_.nonEmpty)
-        .map(l => parseSnapshot(mapper.readTree(l))).toSeq
-    val perFile = listSnapFiles()
-      .map(p => parseSnapshot(mapper.readTree(Files.readString(p))))
-    // legacy lines and per-file snapshots may transiently overlap while a
-    // rewrite migrates formats — per-file wins, then order by id
-    val perFileIds = perFile.map(_.id).toSet
-    val snapshots = (legacy.filterNot(s => perFileIds(s.id)) ++ perFile).sortBy(_.id)
-    TableState(schemas, specs, snapshots)
+    (schemas, specs, versioned(names, "snap-").map(p => mapper.readTree(Files.readString(p._2))))
+  }
+
+  def load(): TableState = {
+    val (schemas, specs, snaps) = listing()
+    TableState(schemas, specs, snaps.map(parseSnapshot))
   }
 
   /** Outline load: like [[load]], but sharded DATA manifest groups are
@@ -378,27 +391,13 @@ final class SnapshotLog(tableDir: Path) {
     * manifests (the metadata-scale side) still parse eagerly. The driver
     * footprint of a 10^7-file snapshot becomes its ~2.4k group names. */
   def loadOutline(): OutlineState = {
-    val schemas = listVersioned("schema-").map { case (v, p) =>
-      v -> GraftSchema.fromJson(Files.readString(p))
-    }.toMap
-    val specs = listVersioned("spec-").map { case (v, p) =>
-      val node = mapper.readTree(Files.readString(p))
-      v -> node.get("partitionCols").elements().asScala.map(_.asText).toSeq
-    }.toMap
-    val legacy =
-      if (!Files.exists(logFile)) Seq.empty
-      else Files.readAllLines(logFile).asScala.filter(_.nonEmpty)
-        .map(l => SnapshotOutline(parseSnapshot(mapper.readTree(l)), Nil)).toSeq
-    val perFile = listSnapFiles()
-      .map(p => parseSnapshotOutline(mapper.readTree(Files.readString(p))))
-    val perFileIds = perFile.map(_.snapshot.id).toSet
-    val outlines =
-      (legacy.filterNot(o => perFileIds(o.snapshot.id)) ++ perFile)
-        .sortBy(_.snapshot.id)
-    OutlineState(schemas, specs, outlines, metaDir.toString)
+    val (schemas, specs, snaps) = listing()
+    OutlineState(schemas, specs, snaps.map(parseSnapshotOutline), metaDir.toString)
   }
 
-  /** [[parseSnapshot]] minus data-manifest materialization. */
+  /** One snap file, sharded DATA manifest groups left unmaterialized
+    * (their names ride on the outline); [[parseSnapshot]] materializes
+    * them. */
   private def parseSnapshotOutline(n: JsonNode): SnapshotOutline = {
     // branch on FIELD PRESENCE: a sharded render always writes the
     // manifests array (possibly empty — zero groups = empty list) and
@@ -421,55 +420,27 @@ final class SnapshotLog(tableDir: Path) {
     }
     def strArr(field: String): Seq[String] = Option(n.get(field))
       .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-    val removedData = strArr("removedDataFiles")
-    val removedDeletes = strArr("removedDeleteFiles")
-    val op = Option(n.get("operation")).map(_.asText).getOrElse {
-      if (removedData.nonEmpty || removedDeletes.nonEmpty) "replace"
-      else if (dels.nonEmpty && (dfs.nonEmpty || dataMans.nonEmpty)) "overwrite"
-      else if (dels.nonEmpty) "delete"
-      else "append"
-    }
+    def required(field: String): JsonNode =
+      SnapshotLog.required(n, field, s"table $tableDir: snapshot ${n.get("id")}")
     SnapshotOutline(
       Snapshot(n.get("id").asLong, n.get("seq").asLong, n.get("schemaV").asInt,
-        n.get("specId").asInt, dfs, dels, removedData, removedDeletes,
-        Option(n.get("timestampMs")).map(_.asLong).getOrElse(0L), op,
+        n.get("specId").asInt, dfs, dels,
+        strArr("removedDataFiles"), strArr("removedDeleteFiles"),
+        required("timestampMs").asLong, required("operation").asText,
         Option(n.get("branch")).map(_.asText).getOrElse("main"),
-        Option(n.get("nextRowId")).map(_.asLong).getOrElse(-1L),
-        SnapshotLog.summaryOfNode(n)),
+        required("nextRowId").asLong, SnapshotLog.summaryOfNode(n)),
       dataMans,
       Option(n.get("dataManifestStats"))
         .map(_.elements().asScala.map(parseGroupStats).toSeq).getOrElse(Nil))
   }
 
-  /** The `nextRowId` stamp of snapshot `id` — one-file parse for
-    * commit-time row-id assignment. When the stamp is absent (a last
-    * snapshot written by a pre-field binary in a mixed-version history)
-    * the fallback folds over ALL retained snapshots' data files — the
-    * last snapshot alone is not enough: a delete-only snapshot carries no
-    * data files, and a single-snapshot fallback would reset the counter
-    * to 0 and reassign row ids already used by earlier files (duplicate
-    * row identities). The full load is paid only on that legacy path;
-    * stamped logs stay a one-file parse. */
-  private def nextRowIdOf(id: Long): Long = {
-    val p = snapFile(id)
-    val node: Option[JsonNode] =
-      if (Files.exists(p)) Some(mapper.readTree(Files.readString(p)))
-      else if (Files.exists(logFile))
-        Files.readAllLines(logFile).asScala.filter(_.nonEmpty)
-          .map(mapper.readTree(_): JsonNode)
-          .find(_.get("id").asLong == id)
-      else None
-    node.flatMap(n => Option(n.get("nextRowId")).map(_.asLong))
-      .getOrElse {
-        (0L +: load().snapshots.flatMap(_.dataFiles).collect {
-          case f if f.firstRowId >= 0 && f.recordCount >= 0 =>
-            f.firstRowId + f.recordCount
-        }).max
-      }
-  }
+  /** The `nextRowId` stamp of snapshot `id` — a one-file parse for
+    * commit-time row-id assignment. */
+  private def nextRowIdOf(id: Long): Long =
+    SnapshotLog.required(mapper.readTree(Files.readString(snapFile(id))),
+      "nextRowId", s"table $tableDir: snapshot $id").asLong
 
   def lastSnapshotId: Long = committedIds().lastOption.getOrElse(0L)
-  def lastSeq: Long = load().snapshots.lastOption.map(_.seq).getOrElse(0L)
 
   /** Publish one snapshot with OPTIMISTIC-CONCURRENCY conflict detection:
     * the incoming id must be exactly last-committed + 1 (fast pre-check
@@ -498,18 +469,20 @@ final class SnapshotLog(tableDir: Path) {
     // DECLARED count advances the counter (Iceberg trusts record_count —
     // S2's lying file wastes one id, harmless). Files adopted with ids
     // already assigned (fast-forward) only raise the stamp.
-    val base = math.max(0L,
-      if (lastId == 0) 0L else nextRowIdOf(lastId))
-    var ctr = base
+    var ctr = if (lastId == 0) 0L else nextRowIdOf(lastId)
     val assigned = s.dataFiles.map { f =>
       // a "replace" snapshot's files re-express EXISTING rows (compaction):
-      // they either carry materialized lineage or — when a source file was
-      // legacy — honestly none; minting fresh ids here would give old rows
-      // new identities and corrupt the changelog's row-id diff
+      // they carry materialized lineage; minting fresh ids here would give
+      // old rows new identities and corrupt the changelog's row-id diff
       if (s.operation == "replace" ||
           f.firstRowId >= 0 || f.lineageInFile || f.recordCount < 0) f
       else { val a = f.copy(firstRowId = ctr); ctr += f.recordCount; a }
     }
+    // never publish an entry the reader refuses
+    require(assigned.forall(f => f.firstRowId >= 0 || f.lineageInFile) &&
+      s.deleteFiles.forall(f => f.kind != "eq" || f.keyColsWritten.nonEmpty),
+      s"table $tableDir: snapshot ${s.id} holds a data entry without row " +
+        "lineage or an equality-delete entry without keyColsWritten")
     val stampedCtr = (ctr +: assigned.collect {
       case f if f.firstRowId >= 0 && f.recordCount >= 0 =>
         f.firstRowId + f.recordCount
@@ -527,36 +500,21 @@ final class SnapshotLog(tableDir: Path) {
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** Replace the whole history (snapshot expiry). A legacy `log.jsonl` is
-    * first atomically REWRITTEN to the kept set — deleting it last would
-    * leave a crash window where already-deleted stale snapshot files
-    * resurrect from the old log on the next load (per-file-wins dedup only
-    * covers overlapping ids). Then kept snapshots are (re)written — each
-    * file-atomic — then stale snapshot files and the log are removed; a
-    * reader racing the rewrite sees a superset of the kept history at
-    * worst, and a crash at ANY point leaves either the old history intact
-    * or the kept history (possibly stored twice), never a mix. */
+  /** Replace the whole history (snapshot expiry). Kept snapshots are
+    * (re)written — each file-atomic — then stale snapshot files are
+    * removed; a reader racing the rewrite sees a superset of the kept
+    * history at worst, and a crash at ANY point leaves either the old
+    * history intact or the kept history, never a mix. */
   def rewrite(snapshots: Seq[Snapshot]): Unit = {
     init()
     val keep = snapshots.map(_.id).toSet
-    if (Files.exists(logFile)) {
-      val tmp = Files.createTempFile(metaDir, ".log", ".tmp")
-      Files.writeString(tmp,
-        snapshots.map(renderSnapshot(_, shard = false)).mkString("", "\n", "\n"))
-      Files.move(tmp, logFile, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
     snapshots.foreach { s =>
       val tmp = Files.createTempFile(metaDir, ".snap", ".tmp")
       Files.writeString(tmp, renderSnapshot(s))
       Files.move(tmp, snapFile(s.id), StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     }
-    listSnapFiles()
-      .filterNot(p => keep(p.getFileName.toString
-        .stripPrefix("snap-").stripSuffix(".json").toLong))
-      .foreach(Files.deleteIfExists(_))
-    Files.deleteIfExists(logFile)
+    committedIds().filterNot(keep).foreach(id => Files.deleteIfExists(snapFile(id)))
     sweepUnreferencedManifests()
   }
 
@@ -565,32 +523,13 @@ final class SnapshotLog(tableDir: Path) {
     * Reference-counted against the CURRENT snap files, so it is safe at
     * any time after a history rewrite. */
   private def sweepUnreferencedManifests(): Unit = {
-    val referenced = listSnapFiles()
-      .flatMap(p => referencedManifests(mapper.readTree(Files.readString(p))))
+    val names = metaNames()
+    val referenced = versioned(names, "snap-")
+      .flatMap(p => referencedManifests(mapper.readTree(Files.readString(p._2))))
       .toSet
-    if (Files.exists(metaDir)) {
-      val s = Files.list(metaDir)
-      try s.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("manifest-") && n.endsWith(".json") && !referenced(n)
-        }.toSeq.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
+    names.filter(n => n.startsWith("manifest-") && n.endsWith(".json") && !referenced(n))
+      .foreach(n => Files.deleteIfExists(metaDir.resolve(n)))
   }
-
-  private def listSnapFiles(): Seq[Path] =
-    if (!Files.exists(metaDir)) Seq.empty
-    else {
-      val s = Files.list(metaDir)
-      try s.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("snap-") && n.endsWith(".json")
-        }.toSeq.sortBy(p => p.getFileName.toString
-          .stripPrefix("snap-").stripSuffix(".json").toLong)
-      finally s.close()
-    }
 
   // ---- named refs (Iceberg branch/tag surface: tag → snapshot id) ------
 
@@ -609,8 +548,7 @@ final class SnapshotLog(tableDir: Path) {
     * data path). */
   def setRef(name: String, snapshotId: Long): Unit = {
     init()
-    require(committedIds().contains(snapshotId) ||
-      load().snapshots.exists(_.id == snapshotId),
+    require(committedIds().contains(snapshotId),
       s"ref $name: snapshot $snapshotId is not committed")
     val root = mapper.createObjectNode()
     (refs + (name -> snapshotId)).toSeq.sortBy(_._1)
@@ -757,17 +695,6 @@ final class SnapshotLog(tableDir: Path) {
 
   // ---- json ----
 
-  private def listVersioned(prefix: String): Seq[(Int, Path)] =
-    if (!Files.exists(metaDir)) Seq.empty
-    else {
-      val s = Files.list(metaDir)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(prefix))
-        .map(p => (p.getFileName.toString.stripPrefix(prefix).stripSuffix(".json").toInt, p))
-        .toSeq.sortBy(_._1)
-      finally s.close()
-    }
-
   private def putPartition(o: ObjectNode, partition: Map[String, String]): Unit = {
     val p = o.putObject("partition")
     partition.foreach { case (k, v) => p.put(k, v) }
@@ -867,25 +794,22 @@ final class SnapshotLog(tableDir: Path) {
       n.get("minSeq").asLong, n.get("maxSeq").asLong,
       SnapshotLog.metricsOfNode(n))
 
-  /** Render a snapshot. With `shard = true` (the on-disk snap files),
-    * oversized file lists move into manifest-group files and only their
-    * names are inlined; `shard = false` (the legacy single-file log)
-    * always inlines. */
-  private def renderSnapshot(s: Snapshot, shard: Boolean = true): String = {
+  /** Render a snapshot: oversized file lists move into manifest-group
+    * files and only their names are inlined. */
+  private def renderSnapshot(s: Snapshot): String = {
     val root = mapper.createObjectNode()
     root.put("id", s.id); root.put("seq", s.seq)
     root.put("schemaV", s.schemaV); root.put("specId", s.specId)
     root.put("timestampMs", s.timestampMs); root.put("operation", s.operation)
-    if (s.nextRowId >= 0) root.put("nextRowId", s.nextRowId)
-    // default-omitted: main snapshots render byte-identical to pre-branch
-    // logs, and legacy logs parse back as main
+    root.put("nextRowId", s.nextRowId)
+    // default-omitted: a snapshot without the field is on main
     if (s.branch != "main") root.put("branch", s.branch)
     if (s.summary.nonEmpty) {
       val sm = root.putObject("summary")
       s.summary.toSeq.sortBy(_._1).foreach { case (k, v) => sm.put(k, v) }
     }
     val big = s.dataFiles.size + s.deleteFiles.size > SnapshotLog.shardThreshold
-    if (shard && big) {
+    if (big) {
       val token = java.util.UUID.randomUUID().toString.take(8)
       val dm = root.putArray("dataManifests")
       writeManifestGroups(s.id, token, "data", s.dataFiles.map(dataFileNode))
@@ -917,53 +841,27 @@ final class SnapshotLog(tableDir: Path) {
     SnapshotLog.partitionOfNode(n)
 
   private def parseDataEntry(o: JsonNode): DataFileEntry =
-    SnapshotLog.dataEntryOfNode(o)
+    SnapshotLog.dataEntryOfNode(o, tableDir.toString)
 
-  private def parseDeleteEntry(o: JsonNode): DeleteFileEntry =
-    DeleteFileEntry(o.get("path").asText, partitionOf(o), o.get("kind").asText,
+  private def parseDeleteEntry(o: JsonNode): DeleteFileEntry = {
+    val kind = o.get("kind").asText
+    DeleteFileEntry(o.get("path").asText, partitionOf(o), kind,
       o.get("equalityCols").elements().asScala.map(_.asText).toSeq,
       o.get("equalityIds").elements().asScala.map(_.asInt).toSeq,
       o.get("seq").asLong,
-      Option(o.get("keyColsWritten")) // absent on pre-field (legacy) logs
-        .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil),
-      metricsOf(o)) // absent on legacy logs → never pruned
+      if (kind != "eq") Nil
+      else SnapshotLog.required(o, "keyColsWritten",
+        s"table $tableDir: equality-delete entry ${o.get("path").asText}")
+        .elements().asScala.map(_.asText).toSeq,
+      metricsOf(o))
+  }
 
+  /** One snap file, fully materialized: [[parseSnapshotOutline]] plus the
+    * sharded data manifest groups it names. */
   private def parseSnapshot(n: JsonNode): Snapshot = {
-    val dfs = Option(n.get("dataManifests")) match {
-      case Some(man) =>
-        readManifestGroups(man.elements().asScala.map(_.asText).toSeq,
-          parseDataEntry)
-      case None =>
-        n.get("dataFiles").asInstanceOf[ArrayNode].elements().asScala
-          .map(parseDataEntry).toSeq
-    }
-    val dels = Option(n.get("deleteManifests")) match {
-      case Some(man) =>
-        readManifestGroups(man.elements().asScala.map(_.asText).toSeq,
-          parseDeleteEntry)
-      case None =>
-        n.get("deleteFiles").asInstanceOf[ArrayNode].elements().asScala
-          .map(parseDeleteEntry).toSeq
-    }
-    def strArr(field: String): Seq[String] = Option(n.get(field))
-      .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-    val removedData = strArr("removedDataFiles")
-    val removedDeletes = strArr("removedDeleteFiles")
-    // legacy logs predate the explicit operation field: infer it exactly
-    // the way the old incremental-scan classifier did, so their behavior
-    // is unchanged — new logs always carry the field
-    val op = Option(n.get("operation")).map(_.asText).getOrElse {
-      if (removedData.nonEmpty || removedDeletes.nonEmpty) "replace"
-      else if (dels.nonEmpty && dfs.nonEmpty) "overwrite"
-      else if (dels.nonEmpty) "delete"
-      else "append"
-    }
-    Snapshot(n.get("id").asLong, n.get("seq").asLong, n.get("schemaV").asInt,
-      n.get("specId").asInt, dfs, dels, removedData, removedDeletes,
-      Option(n.get("timestampMs")).map(_.asLong).getOrElse(0L), op,
-      Option(n.get("branch")).map(_.asText).getOrElse("main"),
-      Option(n.get("nextRowId")).map(_.asLong).getOrElse(-1L),
-      SnapshotLog.summaryOfNode(n))
+    val o = parseSnapshotOutline(n)
+    if (o.dataManifests.isEmpty) o.snapshot
+    else o.snapshot.copy(dataFiles = readManifestGroups(o.dataManifests, parseDataEntry))
   }
 
   /** LIGHT parse of every committed snapshot's (id, branch, summary) —
@@ -971,24 +869,13 @@ final class SnapshotLog(tableDir: Path) {
     * exactly-once gate scans this per micro-batch; keeping it O(snap
     * files) rather than O(entries) is what makes the gate free on a
     * 10^7-file table. */
-  def summaries(): Seq[(Long, String, Map[String, String])] = {
-    val perFile = listSnapFiles().map { p =>
+  def summaries(): Seq[(Long, String, Map[String, String])] =
+    listSnapFiles().map { p =>
       val n = mapper.readTree(Files.readString(p))
       (n.get("id").asLong,
         Option(n.get("branch")).map(_.asText).getOrElse("main"),
         SnapshotLog.summaryOfNode(n))
     }
-    val legacy =
-      if (!Files.exists(logFile)) Seq.empty
-      else Files.readAllLines(logFile).asScala.filter(_.nonEmpty).map { l =>
-        val n = mapper.readTree(l)
-        (n.get("id").asLong,
-          Option(n.get("branch")).map(_.asText).getOrElse("main"),
-          SnapshotLog.summaryOfNode(n))
-      }.toSeq
-    val ids = perFile.map(_._1).toSet
-    (legacy.filterNot(s => ids(s._1)) ++ perFile).sortBy(_._1)
-  }
 }
 
 object SnapshotLog {
@@ -1010,6 +897,19 @@ object SnapshotLog {
   val driverGroupEntriesParsed = new java.util.concurrent.atomic.AtomicLong(0L)
 
   def apply(tableDir: String): SnapshotLog = new SnapshotLog(Paths.get(tableDir))
+
+  /** Files of older snapshot-log layouts: the single-file log and the
+    * streaming sink's separate batch-epoch file. Their presence refuses
+    * the table ([[UnsupportedTableFormatException]]). */
+  val RefusedFiles: Set[String] = Set("log.jsonl", "sink-epoch.txt")
+
+  /** `n`'s field `field`, or a refusal naming `where` (the table
+    * directory and the entry) and the missing field. */
+  private[meta] def required(n: JsonNode, field: String, where: => String): JsonNode =
+    Option(n.get(field)).getOrElse(throw new UnsupportedTableFormatException(
+      s"$where lacks `$field`, which the current snapshot-log format always " +
+        "writes: the table was written in an older format that graft no " +
+        "longer reads; recreate the table"))
 
   // ---- static entry parsing (shared by the driver loader and the
   // distributed outline planner, whose tasks parse group files without a
@@ -1037,12 +937,18 @@ object SnapshotLog {
       }.toMap
     }.getOrElse(Map.empty[Int, ColMetrics])
 
-  private[meta] def dataEntryOfNode(o: JsonNode): DataFileEntry =
+  /** A data entry of the table at `tableDir`: it must carry row lineage,
+    * a `firstRowId` or a `lineageInFile` flag. */
+  private[meta] def dataEntryOfNode(o: JsonNode, tableDir: String): DataFileEntry = {
+    val lineageInFile = Option(o.get("lineageInFile")).exists(_.asBoolean)
     DataFileEntry(o.get("path").asText, partitionOfNode(o), o.get("specId").asInt,
       o.get("schemaV").asInt, o.get("seq").asLong, o.get("recordCount").asLong,
       metricsOfNode(o),
-      Option(o.get("firstRowId")).map(_.asLong).getOrElse(-1L),
-      Option(o.get("lineageInFile")).exists(_.asBoolean))
+      if (lineageInFile) Option(o.get("firstRowId")).map(_.asLong).getOrElse(-1L)
+      else required(o, "firstRowId",
+        s"table $tableDir: data entry ${o.get("path").asText} (no lineageInFile)").asLong,
+      lineageInFile)
+  }
 
   /** Read ONE data-manifest group file — designed to run inside a Spark
     * planning task (pure function of (metaDir, name); the metadata
@@ -1051,8 +957,10 @@ object SnapshotLog {
     val p = Paths.get(metaDir, name)
     require(Files.exists(p), s"missing manifest group $name — " +
       "metadata corrupted or expiry raced this reader")
+    val tableDir = Paths.get(metaDir).getParent.toString
     new ObjectMapper().readTree(Files.readString(p))
-      .asInstanceOf[ArrayNode].elements().asScala.map(dataEntryOfNode).toVector
+      .asInstanceOf[ArrayNode].elements().asScala
+      .map(dataEntryOfNode(_, tableDir)).toVector
   }
 }
 
@@ -1129,6 +1037,11 @@ final case class OutlineState(
     TableState(schemas, specs, outlines.map(_.snapshot))
   }
 }
+
+/** A table whose metadata is not in the one snapshot-log format graft
+  * reads ([[SnapshotLog]]): an older layout or an entry without a field
+  * the current writer always writes. Nothing of the table is read. */
+final class UnsupportedTableFormatException(msg: String) extends RuntimeException(msg)
 
 /** A commit staged against a table version another writer has already
   * advanced past (Iceberg `CommitFailedException` analog). The staged

@@ -1,6 +1,7 @@
 package graft.read
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,14 +46,9 @@ object MorReader {
   /** Row-lineage service columns (Iceberg v3): [[RowIdCol]] is the stable
     * row identity `firstRowId + position` (or the materialized value a
     * compaction preserved), [[LastSeqCol]] the sequence number that last
-    * produced the row. Null on files without lineage (legacy entries). */
+    * produced the row. */
   val RowIdCol = "_graft_row_id"
   val LastSeqCol = "_graft_last_seq"
-
-  /** Plan-time Parquet footer probes performed (legacy eq-delete entries
-    * only — tables written by the current writer must plan at ZERO; the
-    * counter exists so specs can pin that invariant). */
-  private[graft] val footerProbes = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Delete files that SURVIVED plan-time pruning, cumulative across scans
     * (specs read the delta around one scan to pin the pruning invariant). */
@@ -257,7 +253,7 @@ object MorReader {
         val dt = live.fields.find(_.name == k).get.dataType
         vs.toSeq.map(v => col(k) === lit(v).cast(dt)).reduce(_ || _)
     }.foldLeft(lit(true))(_ && _)
-    withMeta(spark, st, live, partitionFilter, ranges, keep)
+    withMeta(spark, st, live, partitionFilter, ranges, keep, pointValues)
       .where(partPred && rangePred && pointPred)
       .select((live.names ++ keepInternal).map(col): _*)
   }
@@ -694,8 +690,7 @@ object MorReader {
     val st = SnapshotLog(tableDir).load().mainOnly.asOf(toInclusive)
     val live = st.schema
     // rewrites are identified by the snapshot's EXPLICIT operation (the
-    // writer stamps it at commit; legacy logs without the field get it
-    // inferred once at parse time) — never by sniffing removed-file lists,
+    // writer stamps it at commit) — never by sniffing removed-file lists,
     // so a rewrite that happened to remove nothing still classifies right
     val inc = st.copy(snapshots = st.snapshots.map { s =>
       val rewrite = s.operation == "replace"
@@ -737,8 +732,8 @@ object MorReader {
     * live sets, as `change_kind ∈ {insert, delete}` plus the full row
     * (schema as of `toInclusive`).
     *
-    * When every file in scope carries ROW LINEAGE (the normal case — all
-    * current writers assign it), the diff keys on the stable `_row_id`:
+    * The diff keys on the stable ROW LINEAGE id `_row_id`, which every
+    * committed file carries:
     *   - `insert`: row ids are MONOTONE and never reused, so the inserts
     *     are exactly the live rows at `to` with `_row_id >=` the table's
     *     row-id counter at `from` (one metadata constant) — a single
@@ -749,11 +744,6 @@ object MorReader {
     *     the window is correctly reported (its tombstones reference the
     *     compacted file, but the row's identity is unchanged), and the
     *     compaction itself produces no events.
-    *
-    * Files without lineage (legacy logs) fall back to `(file path,
-    * position)` identity with rewrite removals ignored on both legs —
-    * correct for windows where rewritten rows are not subsequently
-    * deleted, the best (path, pos) identity can do.
     *
     * At 100 TB the common incremental consumer (hourly sync) diffs a range
     * holding a few files; the legs plan against the two live sets, never
@@ -778,46 +768,13 @@ object MorReader {
     val stTo = st.asOf(toInclusive)
     val stFrom = st.asOf(fromExclusive)
     val live = stTo.schema
-    val lineageComplete = (stFrom.dataFiles ++ stTo.dataFiles)
-      .forall(f => f.lineageInFile || f.firstRowId >= 0)
-    val (inserts, deletes) =
-      if (lineageComplete) {
-        // ---- row-id diff: exact under any interleaving of rewrites and
-        // deletes, because identity survives the rewrite ----------------
-        val fromNextRowId =
-          (0L +: stFrom.snapshots.map(_.nextRowId)).max
-        val preL = withMeta(spark, stFrom, live, Map.empty)
-        val postL = withMeta(spark, stTo, live, Map.empty)
-        (postL.where(col(RowIdCol) >= fromNextRowId),
-          preL.join(postL.select(col(RowIdCol)), Seq(RowIdCol), "left_anti"))
-      } else {
-        // ---- legacy (path, pos) identity: rewrite removals ignored ----
-        val insState = stTo.copy(snapshots = stTo.snapshots.map { s =>
-          val rewrite = s.operation == "replace" // explicit, writer-stamped
-          if (s.id <= fromExclusive) s.copy(dataFiles = Nil)
-          else if (rewrite) s.copy(dataFiles = Nil,
-            removedDataFiles = Nil, removedDeleteFiles = Nil)
-          else s
-        })
-        // post-state of the FROM rows: strip in-window file additions, and
-        // strip removals ONLY for rewrites ("replace" — their removals
-        // re-express rows that are still live). A user delete/overwrite
-        // snapshot's removals (deleteWhere's metadata-tier file drops) are
-        // REAL deletions and must stay, or the dropped files' rows survive
-        // the anti-join and the window reports zero delete events.
-        val oldAtTo = stTo.copy(snapshots = stTo.snapshots.map { s =>
-          if (s.id > fromExclusive) {
-            if (s.operation == "replace") s.copy(dataFiles = Nil,
-              removedDataFiles = Nil, removedDeleteFiles = Nil)
-            else s.copy(dataFiles = Nil)
-          } else s
-        })
-        val ins = withMeta(spark, insState, live, Map.empty)
-        val pre = withMeta(spark, stFrom, live, Map.empty)
-        val post = withMeta(spark, oldAtTo, live, Map.empty)
-        (ins, pre.join(post.select(FilePathCol, PosCol),
-          Seq(FilePathCol, PosCol), "left_anti"))
-      }
+    // row-id diff: exact under any interleaving of rewrites and deletes,
+    // because identity survives the rewrite
+    val fromNextRowId = (0L +: stFrom.snapshots.map(_.nextRowId)).max
+    val pre = withMeta(spark, stFrom, live, Map.empty)
+    val post = withMeta(spark, stTo, live, Map.empty)
+    val inserts = post.where(col(RowIdCol) >= fromNextRowId)
+    val deletes = pre.join(post.select(col(RowIdCol)), Seq(RowIdCol), "left_anti")
     val tail: Seq[Column] =
       if (withLineage) Seq(col(RowIdCol).as("_row_id")) else Nil
     inserts.withColumn("change_kind", lit("insert"))
@@ -1029,7 +986,8 @@ object MorReader {
   private[graft] def withMeta(spark: SparkSession, st: TableState, live: GraftSchema,
                               partitionFilter: Map[String, Set[String]],
                               ranges: Map[String, ColRange] = Map.empty,
-                              fileKeep: DataFileEntry => Boolean = _ => true): DataFrame = {
+                              fileKeep: DataFileEntry => Boolean = _ => true,
+                              pointValues: Map[String, Set[String]] = Map.empty): DataFrame = {
     val dataFiles =
       planDataFiles(spark, st.dataFiles, live, partitionFilter, ranges)
         .filter(fileKeep)
@@ -1088,26 +1046,35 @@ object MorReader {
       }
       Some(Some((lo, hi)))
     }
+    // A point probe as the row predicate sees it (cast to the key's type),
+    // rendered like the writer's bounds; None (no clean cast) prunes nothing.
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    def probeBound(v: String, dt: DataType): Option[String] =
+      scala.util.Try(Cast(Cast(Literal(v), dt, tz), StringType, tz).eval())
+        .toOption.flatMap(Option(_)).map(_.toString)
     // An eq-delete file is skippable if ANY key field proves no scanned
     // row can match: keys all null, or the file's recorded key range is
-    // disjoint from the scan's range predicate on that column or from the
-    // surviving files' recorded bounds.
+    // disjoint from the scan's range predicate on that column, from every
+    // point probe on it, or from the surviving files' recorded bounds.
     def eqFilePrunable(f: DeleteFileEntry): Boolean =
       f.equalityIds.exists { fid =>
         f.metrics.get(fid).exists { m =>
           (m.min, m.max) match {
             case (Some(dlo), Some(dhi)) =>
               val dt = fieldTypeById(fid)
-              val vsRange = live.fields.find(_.id == fid).map(_.name)
-                .flatMap(ranges.get)
+              val name = live.fields.find(_.id == fid).map(_.name)
+              val vsRange = name.flatMap(ranges.get)
                 .exists(r => disjoint(dt, dlo, dhi, r.lo, r.hi))
+              val vsProbes = name.flatMap(pointValues.get).exists(vs =>
+                vs.nonEmpty && vs.forall(v => probeBound(v, dt)
+                  .exists(b => disjoint(dt, dlo, dhi, Some(b), Some(b)))))
               val vsEnvelope = dataEnvelope(fid, dt) match {
                 case Some(None) => true
                 case Some(Some((elo, ehi))) =>
                   disjoint(dt, dlo, dhi, Some(elo), Some(ehi))
                 case None => false
               }
-              vsRange || vsEnvelope
+              vsRange || vsProbes || vsEnvelope
             case _ => true // delete keys ALL NULL: equality matches nothing
           }
         }
@@ -1184,7 +1151,7 @@ object MorReader {
 
     // file → sequence number and first row id, stamped in-row from the
     // planned entries (row id = firstRowId + position, Iceberg v3; a
-    // negative firstRowId means the file has no lineage)
+    // compacted file has no firstRowId and carries its ids in-file)
     val seqOf = FileConsts.longs(dataFiles.map(f => f.path -> f.seq))
     val firstRowIdOf = FileConsts.longs(
       dataFiles.filter(_.firstRowId >= 0).map(f => f.path -> f.firstRowId))
@@ -1278,49 +1245,21 @@ object MorReader {
     // ---- equality deletes: per key-set anti-join with strict seq ---------
     // ONE multi-path scan per key set: eq-delete files carry canonical
     // `_dk<fieldId>` key columns written at delete time (field ids are
-    // stable across schema epochs), so 100 delete commits on the same keys
-    // are 1 FileScan, not 100 plan branches. Each delete row reads its
-    // file's sequence number and partition scope from in-row path lookups
-    // — the exact shape of the pos-delete path.
-    def keyDataType(kid: Int): DataType = fieldTypeById(kid)
+    // stable across schema epochs; the log refuses an entry without
+    // `keyColsWritten`, so no file lacks them), so 100 delete commits on
+    // the same keys are 1 FileScan, not 100 plan branches. Each delete row
+    // reads its file's sequence number and partition scope from in-row
+    // path lookups — the exact shape of the pos-delete path.
     val eqFiles = deleteFiles.filter(_.kind == "eq")
     eqFiles.groupBy(_.equalityIds.sorted).toSeq.sortBy(_._1.mkString(",")).foreach {
       case (keyIds, fs) =>
         val partCols = fs.flatMap(_.partition.keys).distinct.sorted
-        // A file written before the canonical-key change lacks `_dk*`
-        // columns; a schema-pinned read would fill them with null and the
-        // anti-join would SILENTLY no-op (deleted rows resurrect). The
-        // writer records what it wrote (`keyColsWritten`), so plan
-        // construction normally does ZERO file I/O; only entries from logs
-        // predating the field pay one driver-side footer check each, and
-        // legacy files fall back to delete-time column names read per file
-        // (the pre-change path: correct, just one scan branch each).
-        val (canonical, legacy) = fs.partition { f =>
-          if (f.keyColsWritten.nonEmpty)
-            keyIds.forall(kid => f.keyColsWritten.contains(s"_dk$kid"))
-          else {
-            footerProbes.incrementAndGet()
-            val names = spark.read.parquet(f.path).schema.fieldNames.toSet
-            keyIds.forall(kid => names.contains(s"_dk$kid"))
-          }
-        }
         val delSchema = StructType(keyIds.map(kid =>
-          StructField(s"_dk$kid", keyDataType(kid))))
-        def legacyRead(f: graft.meta.DeleteFileEntry) = {
-          val byId = f.equalityIds.zip(f.equalityCols).toMap
-          spark.read.parquet(f.path)
-            .select(keyIds.map(kid =>
-              col(byId(kid)).cast(keyDataType(kid)).as(s"_dk$kid")) :+
-              lit(f.path).as("_d_src0"): _*)
-        }
-        val scans =
-          (if (canonical.nonEmpty)
-             Seq(spark.read.schema(delSchema).parquet(canonical.map(_.path): _*)
-               .withColumn("_d_src0", normPath(col("_metadata.file_path"))))
-           else Nil) ++ legacy.map(legacyRead)
+          StructField(s"_dk$kid", fieldTypeById(kid))))
         val src = col("_d_src0")
         val eqSeqOf = FileConsts.longs(fs.map(f => f.path -> f.seq))
-        val dels = scans.reduce(_.unionByName(_))
+        val dels = spark.read.schema(delSchema).parquet(fs.map(_.path): _*)
+          .withColumn("_d_src0", normPath(col("_metadata.file_path")))
           .select(keyIds.map(kid => col(s"_dk$kid")) ++
             (eqSeqOf(src).as("_d_seq") +: partCols.map(p =>
               FileConsts.strings(fs.flatMap(f => f.partition.get(p).map(f.path -> _)))(src)

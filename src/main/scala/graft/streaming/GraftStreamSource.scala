@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
@@ -212,7 +212,8 @@ class GraftSource(spark: SparkSession, dir: String, mode: String,
   * double-append). Keying by the streaming queryId keeps two concurrent
   * queries writing the same table from eating each other's batch ids.
   * The replay check is a LIGHT metadata scan ([[SnapshotLog.summaries]] —
-  * O(snap files), no manifest materialization). */
+  * O(snap files), no manifest materialization), and it refuses a table
+  * that still carries the older separate epoch file. */
 class GraftSink(spark: SparkSession, dir: String,
                 writeMode: String = "append",
                 upsertKeys: Seq[String] = Nil) extends Sink {
@@ -230,13 +231,8 @@ class GraftSink(spark: SparkSession, dir: String,
 
   private def lastBatch: Long = {
     val key = gateKey
-    val fromSummaries = SnapshotLog(dir).summaries()
+    SnapshotLog(dir).summaries()
       .flatMap(_._3.get(key)).map(_.toLong).maxOption.getOrElse(-1L)
-    // legacy epoch file (pre-summary tables): still honored, never written
-    val legacy = Paths.get(dir, "metadata", "sink-epoch.txt")
-    val fromLegacy =
-      if (Files.exists(legacy)) Files.readString(legacy).trim.toLong else -1L
-    math.max(fromSummaries, fromLegacy)
   }
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {

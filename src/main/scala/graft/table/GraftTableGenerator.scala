@@ -1420,23 +1420,10 @@ final class GraftTableGenerator(
         s.copy(dataFiles = s.dataFiles.filter(f => groupPaths(f.path)))))
       // survivors carry their ORIGINAL row ids and last-updated seqs into
       // the rewritten file as physical columns (Iceberg-v3 row lineage:
-      // identity survives compaction) — but ONLY when every source file in
-      // the group HAS lineage. A legacy file (firstRowId=-1, no materialized
-      // ids) reads null row ids; stamping lineageInFile=true over nulls
-      // would make changelogBetween's lineage-completeness check pass and
-      // then misreport every null-id row (spurious deletes, dropped
-      // inserts). Honest metadata instead: the rewritten file stays a
-      // legacy file and the changelog keeps its (path, pos) fallback.
-      val groupHasLineage =
-        files.forall(f => f.lineageInFile || f.firstRowId >= 0)
-      val merged =
-        if (groupHasLineage)
-          MorReader.withMeta(spark, restricted, schema, Map.empty)
-            .select(schema.names.map(col)
-              :+ col(MorReader.RowIdCol) :+ col(MorReader.LastSeqCol): _*)
-        else
-          MorReader.withMeta(spark, restricted, schema, Map.empty)
-            .select(schema.names.map(col): _*)
+      // identity survives compaction)
+      val merged = MorReader.withMeta(spark, restricted, schema, Map.empty)
+        .select(schema.names.map(col)
+          :+ col(MorReader.RowIdCol) :+ col(MorReader.LastSeqCol): _*)
       val partitionString = partitionDirName(partition)
       val target =
         if (partitionString.nonEmpty)
@@ -1445,7 +1432,7 @@ final class GraftTableGenerator(
         else uniqueNumberedFile(dataDir, "%02d.parquet")
       val w = writeFile(merged, target, dataStats)
       stagedData :+= DataFileEntry(target.toString, partition, specId, schemaV,
-        opSeq, w.rows, metrics = w.metrics, lineageInFile = groupHasLineage)
+        opSeq, w.rows, metrics = w.metrics, lineageInFile = true)
       stagedRemovedData ++= files.map(_.path)
       stagedRemovedDeletes ++=
         st.deleteFiles.filter(_.partition == partition).map(_.path)
@@ -1796,14 +1783,8 @@ final class GraftTableGenerator(
       val groupPaths = files.map(_.path).toSet
       val restricted = st.copy(snapshots = st.snapshots.map(s =>
         s.copy(dataFiles = s.dataFiles.filter(f => groupPaths(f.path)))))
-      // same lineage-honesty rule as [[compact]]: materialized row-id
-      // columns only when every source file has lineage — never stamp
-      // lineageInFile over null ids
-      val groupHasLineage =
-        files.forall(f => f.lineageInFile || f.firstRowId >= 0)
-      val lineageCols: Seq[Column] =
-        if (groupHasLineage) Seq(col(MorReader.RowIdCol), col(MorReader.LastSeqCol))
-        else Nil
+      // rows keep their original ids, as in [[compact]]
+      val lineageCols = Seq(col(MorReader.RowIdCol), col(MorReader.LastSeqCol))
       val merged = MorReader.withMeta(spark, restricted, schema, Map.empty)
         .select(schema.names.map(col) ++ lineageCols: _*)
         .localCheckpoint()
@@ -1826,7 +1807,7 @@ final class GraftTableGenerator(
         val w = writeFile(slice.select(schema.names.map(col) ++ lineageCols: _*),
           target, dataStats)
         stagedData :+= DataFileEntry(target.toString, partition, specId, schemaV,
-          opSeq, w.rows, metrics = w.metrics, lineageInFile = groupHasLineage)
+          opSeq, w.rows, metrics = w.metrics, lineageInFile = true)
       }
       stagedRemovedData ++= files.map(_.path)
       stagedRemovedDeletes ++=

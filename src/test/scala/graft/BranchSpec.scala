@@ -232,7 +232,7 @@ class BranchSpec extends SparkSpec {
     assert(dev.contains(1000) && !dev.contains(2000) && dev.size == 21)
   }
 
-  test("branch snapshot JSON round-trips; main snapshots stay legacy-shaped") {
+  test("branch snapshot JSON round-trips; main snapshots omit the branch field") {
     val g = new GraftTableGenerator(spark, freshWh("json"), "t")
     g.create(Scenarios.ProductsSchema, Seq("category"))
       .append(Seq("widget"), graft.gen.Bundles.products(), 1, 5).commit()

@@ -139,15 +139,40 @@ class FileConstLookupSpec extends SparkSpec {
     val kinds = SnapshotLog(dir).load().mainOnly.deleteFiles.map(_.kind).toSet
     assert(kinds == Set("pos", "eq", "dv"), kinds)
     // one broadcast per delete kind (pos anti-join, DV join, eq anti-join)
-    // plus the result; no job ships per-file metadata
-    Seq("5" -> 0, "25" -> 0, "45" -> 0, "77" -> 1).foreach { case (k, rows) =>
-      var got = -1
-      val n = jobsOf(s"fcl-point-$k") {
-        got = MorReader.readValues(spark, dir, "id", Seq(k)).collect().length
-      }
-      assert(got == rows, s"id $k")
-      assert(n == 4, s"point read of id $k ran $n jobs")
+    // plus the result; no job ships per-file metadata. Id 45 lies inside
+    // the equality delete's keys (40..49), so all three kinds apply.
+    assert(pointRead(dir, Seq("45")) == (0, 4))
+  }
+
+  test("a point probe outside an equality delete's key bounds skips that delete file") {
+    val dir = mixed.tableDir.toString
+    // the equality delete covers ids 40..49: these probes need only the
+    // position and DV deletes, one job fewer
+    Seq("5" -> 0, "25" -> 0, "77" -> 1).foreach { case (k, rows) =>
+      assert(pointRead(dir, Seq(k)) == (rows, 3), s"id $k")
     }
+    // one probe inside the bounds keeps the file for all of them
+    assert(pointRead(dir, Seq("45", "77")) == (1, 4))
+    // a probe compares as the row predicate casts it: "2024-01-05" is the
+    // timestamp the delete's bound renders as "2024-01-05 00:00:00"
+    val ts = new GraftTableGenerator(spark, wh, "ts_probe")
+      .create(GraftSchema.of("id" -> LongType, "ts" -> TimestampType), Nil)
+    ts.appendData(spark.range(0, 10).withColumn("ts",
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).cast("timestamp")))
+      .commit()
+    ts.equalityDelete(col("id") === 4L, Seq("ts")).commit()
+    val tsDir = ts.tableDir.toString
+    assert(MorReader.readValues(spark, tsDir, "ts", Seq("2024-01-05")).count() == 0)
+    assert(MorReader.readValues(spark, tsDir, "ts", Seq("2024-01-06")).count() == 1)
+  }
+
+  /** (rows, Spark jobs) of a `readValues` on `id`. */
+  private def pointRead(dir: String, ids: Seq[String]): (Int, Int) = {
+    var got = -1
+    val n = jobsOf(s"fcl-point-${ids.mkString("-")}") {
+      got = MorReader.readValues(spark, dir, "id", ids).collect().length
+    }
+    (got, n)
   }
 
   test("a MoR scan's executed plan has no LocalTableScan") {

@@ -837,45 +837,6 @@ class GraftTableSpec extends SparkSpec {
     intercept[IllegalArgumentException](reopened.updateSpec(Seq("source_id"), Nil))
   }
 
-  test("legacy eq-delete files (no _dk columns) still apply via per-file fallback") {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val g = new GraftTableGenerator(spark, wh, "legacy_eq")
-      .create(Scenarios.OrdersSchema, Seq("order_year"))
-      .append(Seq(2019), Bundles.orders(), 1, 100).commit()
-    g.equalityDelete(col("order_id") < 10, Seq("order_id")).commit()
-    assert(g.read.count() == 90)
-    // simulate a table written before the canonical-key change: rewrite the
-    // delete file without its _dk columns (delete-time names remain) AND
-    // strip the log's keyColsWritten field (a legacy writer never wrote it)
-    val delFile = Paths.get(s"$wh/legacy_eq/data/2019/eqdelete-2019-00.parquet")
-    assert(JFiles.exists(delFile))
-    val cols = spark.read.parquet(delFile.toString).columns.filterNot(_.startsWith("_dk"))
-    val tmp = JFiles.createTempDirectory("legacy-eq")
-    spark.read.parquet(delFile.toString)
-      .select(cols.map(col): _*).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString + "/out")
-    val part = JFiles.list(Paths.get(tmp.toString + "/out")).iterator()
-    val rewritten = Iterator.continually(part).takeWhile(_.hasNext).map(_.next())
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    JFiles.copy(rewritten, delFile, StandardCopyOption.REPLACE_EXISTING)
-    // the current writer stores one snap-<id>.json per snapshot; a legacy
-    // writer never wrote keyColsWritten, so strip it from every snapshot file
-    val metaDir = Paths.get(s"$wh/legacy_eq/metadata")
-    val snapFiles = JFiles.list(metaDir).iterator()
-    Iterator.continually(snapFiles).takeWhile(_.hasNext).map(_.next())
-      .filter(_.getFileName.toString.startsWith("snap-"))
-      .foreach(p => JFiles.writeString(p, JFiles.readString(p)
-        .replaceAll(""","keyColsWritten":\[[^\]]*\]""", "")))
-    // stripped file has no _dk columns, yet the deletes must still apply —
-    // via the footer-probe fallback, which must fire for the legacy entry
-    assert(!spark.read.parquet(delFile.toString).columns.exists(_.startsWith("_dk")))
-    val before = graft.read.MorReader.footerProbes.get()
-    assert(g.read.count() == 90)
-    assert(graft.read.MorReader.footerProbes.get() > before,
-      "legacy log entry did not take the footer-probe path")
-    assert(g.read.where(col("order_id") < 10).count() == 0)
-  }
-
   test("file metrics: per-column min/max/nulls in the log, honest for the lying empty file") {
     import graft.meta.SnapshotLog
     val g = new GraftTableGenerator(spark, wh, "metrics_demo")
@@ -912,11 +873,7 @@ class GraftTableSpec extends SparkSpec {
     (0 until 5).foreach { i =>
       g.equalityDelete(col("order_id") === i, Seq("order_id")).commit()
     }
-    val before = graft.read.MorReader.footerProbes.get()
-    val df = g.read // plan construction happens here
-    assert(graft.read.MorReader.footerProbes.get() == before,
-      "plan construction read parquet footers despite keyColsWritten in the log")
-    assert(df.count() == 195)
+    assert(g.read.count() == 195)
   }
 
   test("GenMain --conf k=v parses and reaches the session Hadoop conf (Main.java:97-116)") {
@@ -1064,42 +1021,6 @@ class GraftTableSpec extends SparkSpec {
     val hist = MetaTables.history(spark, dir).orderBy("snapshot_id").collect()
       .map(r => (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
     assert(hist.toSeq == Seq((1L, None), (2L, Some(1L)), (3L, Some(2L))))
-  }
-
-  test("legacy single-file log.jsonl tables load, read, and migrate on expiry") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val g = new GraftTableGenerator(spark, wh, "legacy_log")
-    g.create(Scenarios.OrdersSchema, Seq("order_year"))
-      .append(Seq(2019), Bundles.orders(), 1, 100).commit()
-      .positionalDelete(Seq(2019), col("order_id") % 10 === 0).commit()
-      .append(Seq(2020), Bundles.orders(), 1, 100).commit()
-    // convert to the pre-round-4 format: all snapshots as log.jsonl lines,
-    // per-file snap-*.json gone (exactly what an old writer left behind)
-    val metaDir = Paths.get(s"$wh/legacy_log/metadata")
-    val snapFiles = {
-      val s = JFiles.list(metaDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(_.getFileName.toString.startsWith("snap-"))
-          .toSeq.sortBy(_.getFileName.toString.stripPrefix("snap-")
-            .stripSuffix(".json").toLong)
-      } finally s.close()
-    }
-    val lines = snapFiles.map(JFiles.readString(_)).mkString("", "\n", "\n")
-    JFiles.writeString(metaDir.resolve("log.jsonl"), lines)
-    snapFiles.foreach(JFiles.deleteIfExists(_))
-    // the legacy table loads and merges identically
-    assert(graft.meta.SnapshotLog(g.tableDir.toString).load().snapshots.size == 3)
-    assert(MorReader.read(spark, g.tableDir.toString).count() == 190)
-    assert(MorReader.readAt(spark, g.tableDir.toString, 1L).count() == 100)
-    // expiry on a legacy table migrates to per-file format and must not
-    // resurrect expired history from the old log (crash-order fix)
-    val m = new GraftTableGenerator(spark, wh, "legacy_log").open()
-    m.expireSnapshots(keepLast = 1)
-    assert(!JFiles.exists(metaDir.resolve("log.jsonl")))
-    val after = graft.meta.SnapshotLog(g.tableDir.toString).load()
-    assert(after.snapshots.size == 2) // baseline + kept tail
-    assert(MorReader.read(spark, g.tableDir.toString).count() == 190)
   }
 
   test("delete-file pruning: a pruned scan applies only intersecting delete files") {

@@ -91,8 +91,10 @@ class ShardedManifestSpec extends SparkSpec {
     val (log, meta) = freshLog()
     log.commit(Snapshot(1L, 1L, 1, 0, (0 until 50000).map(entry), Nil,
       Nil, Nil, 1000L, "append"))
-    // a compaction-style removal must fold in the distributed path too
-    log.commit(Snapshot(2L, 2L, 1, 0, (50000 until 50005).map(entry), Nil,
+    // a compaction-style removal must fold in the distributed path too;
+    // compacted files carry their row ids in-file
+    log.commit(Snapshot(2L, 2L, 1, 0,
+      (50000 until 50005).map(entry(_).copy(lineageInFile = true)), Nil,
       Seq(entry(0).path, entry(1).path), Nil, 2000L, "replace"))
     val tableDir = meta.getParent.toString
     val before = SnapshotLog.driverGroupEntriesParsed.get()

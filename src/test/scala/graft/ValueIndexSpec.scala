@@ -70,6 +70,20 @@ class ValueIndexSpec extends SparkSpec {
     assert(ValueIndex.readValue(spark, dir, idx, "140").count() == 0L)
   }
 
+  test("value index built on an empty table refreshes after the first append") {
+    val wh = java.nio.file.Files.createTempDirectory("vidx_empty").toString
+    val g = new GraftTableGenerator(spark, wh, "t")
+    g.create(Scenarios.ProductsSchema, Seq("category"))
+    val dir = g.tableDir.toString
+    val idx = s"$wh/idx"
+    ValueIndex.build(spark, dir, "product_id", idx) // watermark 0
+    g.append(Seq("widget"), graft.gen.Bundles.products(), 1, 20).commit()
+    ValueIndex.refresh(spark, dir, idx) // must accept the from==0 watermark
+    val hit = ValueIndex.readValue(spark, dir, idx, "7")
+    assert(hit.count() == 1 &&
+      hit.select("product_id").collect()(0).getInt(0) == 7)
+  }
+
   test("expiry crossing the watermark is refused loudly") {
     val (g, dir, idx) = fresh("exp")
     ValueIndex.build(spark, dir, "product_id", idx)
