@@ -279,9 +279,16 @@ case class GraftMergeCommand(
 
 /** Driver-side DML runner: the body stages through the generator API and
   * commits one snapshot; row work happens in the Spark jobs those calls
-  * launch, never here. */
+  * launch, never here. A command is run by `executeCollect`, which returns
+  * its (no) rows directly — collecting `doExecute`'s empty RDD would launch
+  * a 0-task job after every statement. */
 case class GraftDmlExec(label: String, body: () => Unit) extends LeafExecNode {
   override def output: Seq[Attribute] = Nil
+  override def executeCollect(): Array[InternalRow] = {
+    body()
+    Array.empty
+  }
+  override def executeTake(limit: Int): Array[InternalRow] = executeCollect()
   override protected def doExecute(): RDD[InternalRow] = {
     body()
     sparkContext.emptyRDD

@@ -245,7 +245,7 @@ object MorReader {
     // on a bucket(n, col) table open 1/n of the files instead of all of
     // them. Missing stats/spec/partName keep the file — never unsound.
     val keep: DataFileEntry => Boolean =
-      pointValuesKeep(st.specs, live, pointValues)
+      pointValuesKeep(spark, st.specs, live, pointValues)
     // surviving files re-apply the IN-set row-level (same soundness rule
     // as partPred/rangePred: stats intersect, not every row does)
     val pointPred = pointValues.collect {
@@ -794,15 +794,23 @@ object MorReader {
     * bucket(n, col) table open 1/n of the files. Missing stats/spec/
     * partName keep the file — never unsound. Shared by the read planner
     * and the pruned DML scans. */
-  private[graft] def pointValuesKeep(specs: Map[Int, Seq[String]],
+  private[graft] def pointValuesKeep(spark: SparkSession,
+                                     specs: Map[Int, Seq[String]],
                                      live: GraftSchema,
                                      pointValues: Map[String, Set[String]])
       : DataFileEntry => Boolean =
     if (pointValues.isEmpty) _ => true
-    else f => pointValues.forall { case (c, values) =>
-      live.fields.find(_.name == c).forall { field =>
+    else {
+      val tz = spark.sessionState.conf.sessionLocalTimeZone
+      // each probe as the row predicate compares it; a probe that does not
+      // cast cleanly (None) keeps every file
+      val probes = pointValues.toSeq.flatMap { case (c, values) =>
+        live.fields.find(_.name == c).map(field =>
+          field -> values.toSeq.map(v => probeBound(v, field.dataType, tz)))
+      }
+      f => probes.forall { case (field, ps) =>
         val statsOk = f.metrics.get(field.id).forall { m =>
-          values.exists { v =>
+          ps.exists(_.forall { v =>
             val envOk = (m.min, m.max) match {
               case (Some(mn), Some(mx)) =>
                 cmpMetric(field.dataType, mx, v).forall(_ >= 0) &&
@@ -811,23 +819,31 @@ object MorReader {
             }
             envOk && m.bloom.forall(b =>
               graft.meta.BloomFilter.mightContain(b, v))
-          }
+          })
         }
         val partOk = specs.get(f.specId).forall { specStrs =>
           specStrs.map(graft.meta.PartitionTransform.parse)
-            .find(_.source == c).forall { t =>
+            .find(_.source == field.name).forall { t =>
               f.partition.get(t.partName).forall { pv =>
-                // unparseable probe value (e.g. an out-of-domain literal
-                // that arrived through a widening cast) keeps the file
-                values.exists(v =>
+                // a probe the transform cannot map keeps the file
+                ps.exists(_.forall(v =>
                   scala.util.Try(t.apply(v, field.dataType))
-                    .getOrElse(None).forall(_ == pv))
+                    .getOrElse(None).forall(_ == pv)))
               }
             }
         }
         statsOk && partOk
       }
     }
+
+  /** A point probe as the row predicate sees it — cast to the column's
+    * type — rendered the way the writer renders bounds (session time
+    * zone); None when it does not cast cleanly. Compared raw, a probe
+    * `2024-01-05` on a timestamp column misses the bound
+    * `2024-01-05 00:00:00` of the row it matches. */
+  private[graft] def probeBound(v: String, dt: DataType, tz: String): Option[String] =
+    scala.util.Try(Cast(Cast(Literal(v), dt, Some(tz)), StringType, Some(tz)).eval())
+      .toOption.flatMap(Option(_)).map(_.toString)
 
   /** May file `f` hold rows matching the extracted predicates? The single
     * entry-level pruning test (partition tuple + metric envelopes +
@@ -1046,12 +1062,7 @@ object MorReader {
       }
       Some(Some((lo, hi)))
     }
-    // A point probe as the row predicate sees it (cast to the key's type),
-    // rendered like the writer's bounds; None (no clean cast) prunes nothing.
-    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-    def probeBound(v: String, dt: DataType): Option[String] =
-      scala.util.Try(Cast(Cast(Literal(v), dt, tz), StringType, tz).eval())
-        .toOption.flatMap(Option(_)).map(_.toString)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
     // An eq-delete file is skippable if ANY key field proves no scanned
     // row can match: keys all null, or the file's recorded key range is
     // disjoint from the scan's range predicate on that column, from every
@@ -1066,7 +1077,7 @@ object MorReader {
               val vsRange = name.flatMap(ranges.get)
                 .exists(r => disjoint(dt, dlo, dhi, r.lo, r.hi))
               val vsProbes = name.flatMap(pointValues.get).exists(vs =>
-                vs.nonEmpty && vs.forall(v => probeBound(v, dt)
+                vs.nonEmpty && vs.forall(v => probeBound(v, dt, tz)
                   .exists(b => disjoint(dt, dlo, dhi, Some(b), Some(b)))))
               val vsEnvelope = dataEnvelope(fid, dt) match {
                 case Some(None) => true
@@ -1088,8 +1099,20 @@ object MorReader {
           case _ => true // empty delete file references nothing
         }
       }
+    // A partition-scoped delete file reaches only rows of its own tuple.
+    // When every surviving data file is partitioned on the delete file's
+    // fields (the same spec — a delete entry records its tuple, not its
+    // spec id) and none has its tuple, it reaches no scanned row. Global-
+    // scope files stay, and so does every file when the scan mixes specs
+    // (an identity scope matches a row by value, in any spec's file).
+    val dataTuples = dataFiles.map(_.partition).toSet
+    val dataKeySets = dataTuples.map(_.keySet)
+    def scopeMissed(f: DeleteFileEntry): Boolean =
+      f.partition.nonEmpty && dataKeySets == Set(f.partition.keySet) &&
+        !dataTuples(f.partition)
     val deleteFiles = st.deleteFiles
       .filter(f => matchesPartition(f.partition, partitionFilter))
+      .filterNot(scopeMissed)
       .filterNot { f =>
         if (f.kind == "eq")
           f.seq <= minDataSeq || // strict visibility: needs seq > some data seq

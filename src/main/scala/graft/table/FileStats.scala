@@ -5,11 +5,16 @@ import java.util.UUID
 
 import scala.collection.mutable
 
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, FileSourceMetadataAttribute,
+  Literal}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.{CaseInsensitiveMap, TypeUtils}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker,
   WriteTaskStats, WriteTaskStatsTracker}
@@ -155,7 +160,7 @@ private[table] object FileStats {
     val output = plan.output
     val partAttrs = partitionBy.map(n => output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"partition column $n not in ${output.map(_.name)}")))
-    val dataNames = output.filterNot(partAttrs.contains).map(_.name)
+    val dataNames = dataColumns(output, partAttrs).map(_.name)
     val ordinals = cols.map { c =>
       val i = dataNames.indexOf(c.name)
       require(i >= 0, s"stats column ${c.name} not among written columns $dataNames")
@@ -179,6 +184,38 @@ private[table] object FileStats {
         WrittenFile(dir.resolve(rel), rows, metrics)
       }
   }
+
+  /** The empty file [[write]] would give a partition of `df` that holds no
+    * row: Spark's writer makes no file for an empty task (other than a
+    * non-partitioned write's task 0), so it is made here, on the driver,
+    * by the writer factory the write tasks use — `df`'s data columns under
+    * the same Parquet options — and carries the metrics of no row. Launches
+    * no job. */
+  def writeEmpty(df: DataFrame, path: Path, partitionBy: Seq[String],
+                 options: Map[String, String], cols: Seq[StatCol]): WrittenFile = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val output = df.queryExecution.executedPlan.output
+    val dataSchema = DataTypeUtils.fromAttributes(
+      dataColumns(output, output.filter(a => partitionBy.contains(a.name))))
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    FileOutputFormat.setOutputPath(job, new org.apache.hadoop.fs.Path(path.getParent.toString))
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, CaseInsensitiveMap(options), dataSchema)
+    val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+    factory.newInstance(path.toString, dataSchema,
+      new TaskAttemptContextImpl(job.getConfiguration, attempt)).close()
+    val (rows, metrics) = new FileAcc(cols).result(spark.sessionState.conf.sessionLocalTimeZone)
+    WrittenFile(path, rows, metrics)
+  }
+
+  /** The columns a write puts in its files, as `FileFormatWriter` derives
+    * them: the plan's output less the partition columns, with file-source
+    * metadata markers cleaned off. */
+  private def dataColumns(output: Seq[Attribute], partAttrs: Seq[Attribute]): Seq[Attribute] =
+    output.filterNot(partAttrs.contains)
+      .map(FileSourceMetadataAttribute.cleanupFileSourceMetadataInformation)
 
   /** The same kernel over EXISTING files (`addFiles` adopts bytes it never
     * writes): `df` carries the stat columns plus `pathCol`, the file each

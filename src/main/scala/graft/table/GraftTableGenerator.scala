@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 import graft.gen.{RecordBundle, ValueGen}
 import graft.meta._
-import graft.read.MorReader
+import graft.read.{FileConsts, MorReader}
 import graft.schema.{GraftField, GraftSchema}
 
 /** Fluent table-building engine — the Spark-native re-expression of the
@@ -456,18 +456,6 @@ final class GraftTableGenerator(
   def positionalDelete(partitionValues: Seq[Any], pred: Column): this.type =
     positionalDelete(Some(partitionValues), pred, 0, 0, Nil)
 
-  /** Scan committed data files (partition-pruned), write ONE positional-
-    * delete file per partition containing `(file_path, pos, row)` of
-    * predicate matches, strictly ordered by (path, pos); optionally
-    * interleave fake non-existent file paths carrying
-    * `extraDeletesPerFile` entries each — delete-file bloat a reader must
-    * ignore (reference `IcebergTableGenerator.java:187-286`; fakes
-    * `:228-235,269-277`; used 10000×10000 by S6 `Main.java:261-266`).
-    *
-    * Fake positions reproduce the cumulative `pos += intRange(1,100)` quirk
-    * via a running-sum window; fake generation is pure Spark expressions —
-    * ~10^8 rows never touch the driver (SURVEY.md §7.4.5).
-    */
   /** Metadata-accelerated range DELETE (Iceberg's delete-by-filter with
     * metadata deletes): rows with `lo <= colName <= hi` (inclusive,
     * canonical-string bounds in the metrics rendering) are deleted in two
@@ -480,10 +468,12 @@ final class GraftTableGenerator(
     *     scan, no file I/O. Dropping a 100 TB retention window costs a
     *     manifest edit.
     *   - files that merely OVERLAP the range get their matching rows
-    *     deleted through the ordinary positional machinery — tombstone
-    *     files, or the partition's merged deletion vector when
-    *     [[vectorDeletes]] is on. Files with no metrics are treated as
-    *     overlapping (conservative: scanned, never mis-dropped).
+    *     deleted through the ordinary positional machinery — one
+    *     (path, pos)-ordered tombstone file per partition, every
+    *     partition's written by ONE scan and ONE write job, or the
+    *     partition's merged deletion vector when [[vectorDeletes]] is on.
+    *     Files with no metrics are treated as overlapping (conservative:
+    *     scanned, never mis-dropped).
     *   - disjoint files are untouched — not even opened.
     *
     * The dropped files stay on disk for time travel, exactly like a
@@ -517,24 +507,19 @@ final class GraftTableGenerator(
       }
     }
     val pred = col(colName) >= lit(lo) && col(colName) <= lit(hi)
-    for ((partition, fs) <- overlapping.groupBy(_.partition).toSeq
-           .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))) {
-      val matches = rawScan(fs).where(pred)
-        .select(col(MorReader.FilePathCol).as("file_path"),
-          col(MorReader.PosCol).as("pos"))
-      if (vectorDeleteMode)
-        stageMergedVector(partition, matches,
+    val groups = overlapping.groupBy(_.partition).toSeq
+      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
+    if (vectorDeleteMode)
+      for ((partition, fs) <- groups)
+        stageMergedVector(partition, rawScan(fs).where(pred)
+            .select(col(MorReader.FilePathCol).as("file_path"),
+              col(MorReader.PosCol).as("pos")),
           st.deleteFiles.filter(f => f.kind == "dv" && f.partition == partition),
           opSeq)
-      else {
-        val target = deleteFileTarget("delete", partition)
-        val w = writeFile(
-          matches.repartition(1).sortWithinPartitions("file_path", "pos"), target,
-          posDeleteStats)
-        stagedDeletes :+= DeleteFileEntry(target.toString, partition, "pos",
-          Nil, Nil, opSeq, metrics = w.metrics)
-      }
-    }
+    else
+      stagePositionFiles(groups, opSeq)(_.where(pred)
+        .select(col(MorReader.FilePathCol).as("file_path"),
+          col(MorReader.PosCol).as("pos"), col(DeleteIdxCol)))
     this
   }
 
@@ -628,12 +613,27 @@ final class GraftTableGenerator(
                              pointValues: Map[String, Set[String]] = Map.empty)
       : this.type = {
     val live = schema
-    val pointKeep = MorReader.pointValuesKeep(log.load().specs, live, pointValues)
+    val pointKeep = MorReader.pointValuesKeep(spark, log.load().specs, live, pointValues)
     positionalDelete(None, pred, 0, 0, Nil,
       f => MorReader.entryMatches(f, live, partitionFilter, ranges) &&
         pointKeep(f))
   }
 
+  /** Scan committed data files (partition-pruned), write ONE positional-
+    * delete file per partition containing `(file_path, pos, row)` of
+    * predicate matches, strictly ordered by (path, pos) — every
+    * partition's file from ONE scan and ONE write job, a partition with no
+    * match getting an empty file; optionally interleave fake non-existent
+    * file paths carrying `extraDeletesPerFile` entries each — delete-file
+    * bloat a reader must ignore (reference
+    * `IcebergTableGenerator.java:187-286`; fakes `:228-235,269-277`; used
+    * 10000×10000 by S6 `Main.java:261-266`).
+    *
+    * Fake positions reproduce the cumulative `pos += intRange(1,100)` quirk
+    * via a running-sum window; fake generation is pure Spark expressions —
+    * ~10^8 rows never touch the driver (SURVEY.md §7.4.5). Each fake row
+    * carries its partition's index, so the fakes join the same write.
+    */
   def positionalDelete(partitionValues: Option[Seq[Any]], pred: Column,
                        extraFilesPerPartition: Int, extraDeletesPerFile: Int,
                        fakeRow: Seq[Column],
@@ -655,45 +655,55 @@ final class GraftTableGenerator(
       }
       return this
     }
-    for ((partition, files) <- plannedPartitions(partitionValues, fileKeep)) {
-      val scan = rawScan(files)
-      val rowStruct = struct(schema.names.map(col): _*).as("row")
-      var matches = scan.where(pred)
-        .select(col(MorReader.FilePathCol).as("file_path"),
-                col(MorReader.PosCol).as("pos"), rowStruct)
-
-      if (extraFilesPerPartition > 0) {
-        val partitionString = partitionDirName(partition)
-        val prefix =
-          if (partitionString.nonEmpty) s"$dataDir/$partitionString/$partitionString-"
-          else s"$dataDir/"
-        val h = md5(concat(lit(name), lit(partitionString), col("id").cast("string"))
+    val groups = plannedPartitions(partitionValues, fileKeep)
+    val rowStruct = struct(schema.names.map(col): _*).as("row")
+    val fakes =
+      if (extraFilesPerPartition == 0) None
+      else {
+        // per partition: its index, `<data>/<part>/<part>-` path prefix
+        // and the partition string the fake uuids hash
+        val parts = groups.zipWithIndex.map { case ((partition, _), i) =>
+          val ps = partitionDirName(partition)
+          (i.toLong, if (ps.nonEmpty) s"$dataDir/$ps/$ps-" else s"$dataDir/", ps)
+        }
+        val h = md5(concat(lit(name), col("_ps"), col("id").cast("string"))
           .cast("binary"))
         val fakeUuid = concat_ws("-", substring(h, 1, 8), substring(h, 9, 4),
           substring(h, 13, 4), substring(h, 17, 4), substring(h, 21, 12))
-        val fakePaths = spark.range(extraFilesPerPartition)
-          .select(format_string("%s%010d-%s-fake.parquet",
-            lit(prefix), col("id"), fakeUuid).as("file_path"))
+        val fakePaths = spark.createDataFrame(parts).toDF(DeleteIdxCol, "_prefix", "_ps")
+          .crossJoin(spark.range(extraFilesPerPartition))
+          .select(col(DeleteIdxCol), format_string("%s%010d-%s-fake.parquet",
+            col("_prefix"), col("id"), fakeUuid).as("file_path"))
         val js = spark.range(extraDeletesPerFile).toDF("j")
-        val w = Window.partitionBy("file_path").orderBy("j")
+        val w = Window.partitionBy(DeleteIdxCol, "file_path").orderBy("j")
           .rowsBetween(Window.unboundedPreceding, -1)
         val delta = (pmod(xxhash64(lit(seed), lit("fakepos"), col("file_path"), col("j")),
           lit(99L)) + 1)
-        val fakes = fakePaths.crossJoin(js)
+        Some(fakePaths.crossJoin(js)
           .withColumn("pos", coalesce(sum(delta).over(w), lit(0L)))
           .select(col("file_path"), col("pos"),
-            struct(schema.names.zip(fakeRow).map { case (n, c) => c.as(n) }: _*).as("row"))
-        matches = matches.unionByName(fakes)
+            struct(schema.names.zip(fakeRow).map { case (n, c) => c.as(n) }: _*).as("row"),
+            col(DeleteIdxCol)))
       }
-
-      val target = deleteFileTarget("delete", partition)
-      val w = writeFile(matches.repartition(1).sortWithinPartitions("file_path", "pos"),
-        target, posDeleteStats)
-      stagedDeletes :+= DeleteFileEntry(target.toString, partition, "pos", Nil, Nil, opSeq,
-        metrics = w.metrics)
+    stagePositionFiles(groups, opSeq) { scan =>
+      val matches = scan.where(pred)
+        .select(col(MorReader.FilePathCol).as("file_path"),
+          col(MorReader.PosCol).as("pos"), rowStruct, col(DeleteIdxCol))
+      fakes.fold(matches)(matches.unionByName(_))
     }
     this
   }
+
+  /** One (file_path, pos)-ordered positional delete file per planned
+    * partition, all from one scan and one write ([[writeDeleteFiles]]). */
+  private def stagePositionFiles(groups: Seq[(Map[String, String], Seq[DataFileEntry])],
+                                 opSeq: Long)(rows: DataFrame => DataFrame): Unit =
+    stagedDeletes ++= writeDeleteFiles("delete", groups, posDeleteStats,
+        Seq("file_path", "pos"))(rows)
+      .map { case (partition, target, w) =>
+        DeleteFileEntry(target.toString, partition, "pos", Nil, Nil, opSeq,
+          metrics = w.metrics)
+      }
 
   /** Semi/anti-join positional DELETE with a correlated RESIDUAL — the
     * `DELETE WHERE [NOT] EXISTS (… s.k = t.k AND s.ts > t.ts …)` shape
@@ -868,8 +878,11 @@ final class GraftTableGenerator(
     equalityDelete(Some(partitionValues), pred, keyCols)
 
   /** Write ONE equality-delete file per partition holding the FULL rows
-    * matching the predicate, with the equality key columns recorded in the
-    * snapshot log; a row is later deleted iff its key tuple matches a
+    * matching the predicate, in scan order, with the equality key columns
+    * recorded in the snapshot log — every partition's file by ONE write
+    * job, whose single task reads the partitions' rows in turn (no
+    * shuffle), a partition with no match getting an empty file; a row is
+    * later deleted iff its key tuple matches a
     * delete row from a strictly later sequence number (reference
     * `IcebergTableGenerator.java:288-365`; key-id resolution
     * `Main.java:590-594`).
@@ -887,12 +900,11 @@ final class GraftTableGenerator(
     keyCols.foreach(k => require(schema.names.contains(k), s"no key col $k"))
     val opSeq = nextOpSeq()
     val canonicalKeys = keyCols.map(k => col(k).as(s"_dk${schema.fieldId(k)}"))
-    for ((partition, files) <- plannedPartitions(partitionValues)) {
-      val matches = rawScan(files).where(pred)
-        .select(schema.names.map(col) ++ canonicalKeys: _*)
-      val target = deleteFileTarget("eqdelete", partition)
-      val w = writeFile(matches, target, eqDeleteStats(keyCols))
-      stagedDeletes :+= DeleteFileEntry(target.toString, partition, "eq", keyCols,
+    stagedDeletes ++= writeDeleteFiles("eqdelete", plannedPartitions(partitionValues),
+        eqDeleteStats(keyCols), order = Nil) { scan =>
+      scan.where(pred).select(schema.names.map(col) ++ canonicalKeys :+ col(DeleteIdxCol): _*)
+    }.map { case (partition, target, w) =>
+      DeleteFileEntry(target.toString, partition, "eq", keyCols,
         keyCols.map(schema.fieldId), opSeq,
         keyColsWritten = keyCols.map(k => s"_dk${schema.fieldId(k)}"),
         metrics = w.metrics)
@@ -2448,6 +2460,11 @@ final class GraftTableGenerator(
   private val posDeleteStats =
     Seq(StatCol(DeleteFileEntry.PathFieldId, "file_path", StringType))
 
+  /** [[writeDeleteFiles]]' per-row partition index, and the scan position
+    * it orders rows by when no column order is given (not written). */
+  private val DeleteIdxCol = "_graft_didx"
+  private val ScanOrderCol = "_graft_scan_ord"
+
   /** An equality-delete file's key envelopes, keyed by the key's field id
     * and read from its canonical `_dk<fieldId>` column. */
   private def eqDeleteStats(keyCols: Seq[String]): Seq[StatCol] = keyCols.map { k =>
@@ -2572,6 +2589,60 @@ final class GraftTableGenerator(
     val staging = Files.createTempDirectory(tableDir, ".staging")
     try place(FileStats.write(df, staging, partitionBy, props, stats))
     finally deleteRecursively(staging)
+  }
+
+  /** ONE delete file per planned partition of `groups`, every partition's
+    * file from ONE raw scan and ONE write job — the shape of Iceberg's
+    * position-delta writer, which fans its delete writers out by partition
+    * inside one task set. Each scanned row is stamped with its group's
+    * index (its position in `groups`) by an in-row path lookup; `rows`
+    * turns the stamped scan into the rows to write, keeping the index
+    * column. The write lays them out by index (`partitionBy`): with an
+    * `order`, the rows are hash-partitioned on the index and each
+    * partition's rows sorted by `order`; without one, a single task writes
+    * them in scan order — the one-task, no-shuffle write an
+    * equality-delete file always had. A group no row reaches gets the empty
+    * file Spark's writer makes for no empty task, written on the driver
+    * ([[FileStats.writeEmpty]]). Every file moves to the
+    * [[deleteFileTarget]] name of its partition, claimed in `groups`
+    * order, and comes back with its partition and target in that order. */
+  private def writeDeleteFiles(kind: String,
+                               groups: Seq[(Map[String, String], Seq[DataFileEntry])],
+                               stats: Seq[StatCol], order: Seq[String])
+                              (rows: DataFrame => DataFrame)
+      : Seq[(Map[String, String], Path, WrittenFile)] = {
+    if (groups.isEmpty) return Nil
+    val idxOf = FileConsts.longs(groups.zipWithIndex.flatMap { case ((_, fs), i) =>
+      fs.map(_.path -> i.toLong) })
+    val scan = rawScan(groups.flatMap(_._2))
+      .withColumn(DeleteIdxCol, idxOf(col(MorReader.FilePathCol)))
+    val laid = order match {
+      case Nil => // scan order: one task reads every partition's rows in
+        // turn, as each partition's own one-task write read them
+        rows(scan).withColumn(ScanOrderCol, monotonically_increasing_id())
+          .coalesce(1).sortWithinPartitions(col(DeleteIdxCol), col(ScanOrderCol))
+          .drop(ScanOrderCol)
+      case _ => rows(scan).repartition(groups.size, col(DeleteIdxCol))
+        .sortWithinPartitions((DeleteIdxCol +: order).map(col): _*)
+    }
+    val staging = Files.createTempDirectory(tableDir, ".staging")
+    try {
+      val byIdx = FileStats.write(laid, staging, Seq(DeleteIdxCol), props, stats)
+        .groupBy(_.path.getParent.getFileName.toString
+          .stripPrefix(s"$DeleteIdxCol=").toInt)
+      groups.zipWithIndex.map { case ((partition, _), i) =>
+        val w = byIdx.getOrElse(i, Nil) match {
+          case Seq(w) => w
+          case Nil => FileStats.writeEmpty(laid, staging.resolve(s"empty-$i.parquet"),
+            Seq(DeleteIdxCol), props, stats)
+          case more => sys.error(s"expected one $kind file for partition " +
+            s"${partitionDirName(partition)}, got ${more.size}")
+        }
+        val target = deleteFileTarget(kind, partition)
+        Files.move(w.path, target, StandardCopyOption.REPLACE_EXISTING)
+        (partition, target, w.copy(path = target))
+      }
+    } finally deleteRecursively(staging)
   }
 
   /** [[writeFiles]] of `df` as exactly one file, moved to `target`. */

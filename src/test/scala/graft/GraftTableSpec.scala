@@ -570,8 +570,12 @@ class GraftTableSpec extends SparkSpec {
       val a = MorReader.readValues(spark, dir, c, values)
       val b = MorReader.read(spark, dir, None, Map.empty, pointValues = Map(c -> values.toSet))
       assert(a.inputFiles.sorted.toSeq == b.inputFiles.sorted.toSeq, s"$c in $values")
-      val dataFiles = a.inputFiles.filterNot(_.split('/').last.contains("delete"))
+      val (deleteFiles, dataFiles) =
+        a.inputFiles.partition(_.split('/').last.contains("delete"))
       assert(dataFiles.length == files, s"$c in $values: ${a.inputFiles.mkString(",")}")
+      // a partition-scoped delete file is read only with its partition's data
+      def dirs(fs: Array[String]) = fs.map(_.split('/').dropRight(1).mkString("/")).toSet
+      assert(dirs(deleteFiles).subsetOf(dirs(dataFiles)), a.inputFiles.mkString(","))
       assert(a.collect().map(_.toString).sorted.toSeq ==
         b.collect().map(_.toString).sorted.toSeq, s"$c in $values")
     }
@@ -584,6 +588,29 @@ class GraftTableSpec extends SparkSpec {
     val probes = Seq("36", "37", "38", "39", "40", "41")
     same(gk, "id", probes, probes.flatMap(bucket.apply(_, LongType)).distinct.size)
     same(gk, "val", Seq("74"), 4) // not a partition source: no transform pruning
+    // one equality-delete file per bucket: a read opens those of its buckets only
+    def eqFiles(values: Seq[String]) = MorReader.readValues(spark, gk.tableDir.toString,
+      "id", values).inputFiles.count(_.split('/').last.startsWith("eqdelete"))
+    assert(eqFiles(Seq("37")) == 1)
+    assert(eqFiles(probes) == probes.flatMap(bucket.apply(_, LongType)).distinct.size)
+    assert(MorReader.readValues(spark, gk.tableDir.toString, "id", Seq("37")).count() == 1)
+    assert(MorReader.readValues(spark, gk.tableDir.toString, "id", probes).count() == 5)
+  }
+
+  test("point probes prune data files by the value the row predicate casts them to") {
+    import org.apache.spark.sql.types._
+    val g = new GraftTableGenerator(spark, wh, "pv_cast")
+    g.create(graft.schema.GraftSchema.of("ts" -> TimestampType, "d" -> DateType), Nil)
+    g.appendData(spark.range(1).select(
+      lit(java.sql.Timestamp.valueOf("2024-01-05 00:00:00")).as("ts"),
+      lit(java.sql.Date.valueOf("2024-01-05")).as("d"))).commit()
+    val dir = g.tableDir.toString
+    assert(MorReader.readValues(spark, dir, "ts", Seq("2024-01-05")).count() == 1)
+    assert(MorReader.readValues(spark, dir, "ts", Seq("2024-01-05 00:00:00")).count() == 1)
+    assert(MorReader.readValues(spark, dir, "ts", Seq("2024-01-06")).count() == 0)
+    assert(MorReader.readValues(spark, dir, "d", Seq("2024-01-05 00:00:00")).count() == 1)
+    assert(MorReader.readValues(spark, dir, "d", Seq("2024-1-5")).count() == 1)
+    assert(MorReader.readValues(spark, dir, "d", Seq("2024-01-04")).count() == 0)
   }
 
   test("hidden partition transforms: bucket/truncate/day derive dirs, point reads prune by transform") {
